@@ -11,8 +11,7 @@ interquartile distance as a share of the median. For an end-to-end
 metric of BENCHMARK.json it also judges:
 
 - steady: the spread is below a third of the metric's bound (the
-  benchmark's own target) and within the bound (``setup_s`` is exempt
-  from the spread rule);
+  benchmark's own target) and within the bound;
 - agree (two sets): the second median is not worse than the first by
   more than the bound, and not better by more than the bound either.
 
@@ -84,7 +83,7 @@ def report(sets: list[str]) -> int:
                 q1, q2, q3 = quartiles(vals)
                 sp = (q3 - q1) / abs(q2) if q2 else float("inf")
                 verdict = ""
-                if spec and metric != "setup_s":
+                if spec:
                     if sp > spec["bound"]:
                         verdict, bad = " OUT", bad + 1
                     else:

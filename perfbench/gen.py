@@ -53,13 +53,15 @@ SHAPE_CLASSES = (
     "knn",
 )
 KNN_K = 1000
-#: the first is each set-up's warm-up query; the rest warm the JIT,
-#: untimed, before the measured queries
-WARMUP_CLASSES = ("small_rect", "polygon_2holes", "knn")
+#: one class of each query mode (bbox, circle, polygon, polyline, nn),
+#: the warm-up before measuring: the classes of one mode run the same
+#: library calls and Spark operators, and differ in literals, which
+#: every query compiles afresh
+WARMUP_CLASSES = ("small_rect", "small_circle", "polygon_2holes", "polyline_buffer", "knn")
 BATCH_KINDS = ("multi_bbox", "knn_join", "zonal")
 BATCH_WINDOWS = 64
 BATCH_POSES = 64
-BATCH_ZONES = 16
+BATCH_ZONES = 8
 KNN_JOIN_K = 16
 KNN_JOIN_RADIUS = 8.0
 
@@ -72,7 +74,7 @@ class Sizes:
     append_batches: int = 0
     append_points: int = 0
     queries: int = 14 * 40
-    batches: int = 3 * 20
+    batches: int = 3 * 40
 
 
 def _r2(v: float) -> float:
@@ -113,9 +115,12 @@ def ints_to_xyz(ints: np.ndarray) -> np.ndarray:
 # -- geometry streams -------------------------------------------------------
 
 
-def _center(rng, hotspots, margin: float) -> tuple[float, float]:
-    """Hotspot-biased window centre: half near a hotspot, half uniform."""
-    if rng.random() < 0.5:
+def _center(rng, hotspots, margin: float, near: bool | None = None) -> tuple[float, float]:
+    """Hotspot-biased window centre: near a hotspot or uniform, as
+    ``near`` says, or by a coin flip when it is ``None``."""
+    if near is None:
+        near = rng.random() < 0.5
+    if near:
         h = hotspots[rng.integers(0, len(hotspots))]
         cx, cy = h[0] + rng.normal(0, 2 * HOTSPOT_SIGMA), h[1] + rng.normal(0, 2 * HOTSPOT_SIGMA)
     else:
@@ -145,22 +150,23 @@ def rings_wkt(rings) -> str:
     return f"POLYGON ({body})"
 
 
-def _polygon_with_holes(rng, hotspots, n_holes):
+def _polygon_with_holes(rng, hotspots, n_holes, near=None):
     radius = rng.uniform(60, 100)
-    cx, cy = _center(rng, hotspots, radius + 1)
+    cx, cy = _center(rng, hotspots, radius + 1, near)
     # holes sit well inside the exterior's minimum radius (1 - jitter)
     ext = _star(rng, cx, cy, radius, 10, jitter=0.3)
     shifts = [0.0] if n_holes == 1 else [-0.3, 0.3]
     return [ext] + [_square(cx + dx * radius, cy, 0.15 * radius) for dx in shifts]
 
 
-def make_query(rng, cls: str, hotspots) -> dict:
-    """One single-window query of shape class ``cls``."""
+def make_query(rng, cls: str, hotspots, near: bool | None = None) -> dict:
+    """One single-window query of shape class ``cls``; ``near`` as for
+    ``_center``."""
     q = {"cls": cls, "mode": "bbox", "minz": None, "maxz": None, "k": None}
     if cls in ("small_rect", "large_rect", "bbox_minz", "bbox_maxz"):
         w = rng.uniform(10, 30) if cls == "small_rect" else rng.uniform(100, 200)
         h = w * rng.uniform(0.6, 1.6)
-        cx, cy = _center(rng, hotspots, max(w, h) / 2 + 1)
+        cx, cy = _center(rng, hotspots, max(w, h) / 2 + 1, near)
         q["geometry"] = [_r2(cx - w / 2), _r2(cx + w / 2), _r2(cy - h / 2), _r2(cy + h / 2)]
         if cls == "bbox_minz":
             q["minz"] = _r2(rng.uniform(8, 20))
@@ -168,20 +174,20 @@ def make_query(rng, cls: str, hotspots) -> dict:
             q["maxz"] = _r2(rng.uniform(1, 4))
     elif cls in ("small_circle", "medium_circle"):
         r = rng.uniform(8, 20) if cls == "small_circle" else rng.uniform(40, 80)
-        cx, cy = _center(rng, hotspots, r + 1)
+        cx, cy = _center(rng, hotspots, r + 1, near)
         q["mode"], q["geometry"] = "circle", [[cx, cy], _r2(r)]
     elif cls == "polygon":
         radius = rng.uniform(40, 90)
-        cx, cy = _center(rng, hotspots, radius + 1)
+        cx, cy = _center(rng, hotspots, radius + 1, near)
         q["mode"] = "polygon"
         q["geometry"] = rings_wkt([_star(rng, cx, cy, radius, 10)])
     elif cls in ("polygon_1hole", "polygon_2holes"):
         q["mode"] = "polygon"
-        q["geometry"] = rings_wkt(_polygon_with_holes(rng, hotspots, 1 if cls == "polygon_1hole" else 2))
+        q["geometry"] = rings_wkt(_polygon_with_holes(rng, hotspots, 1 if cls == "polygon_1hole" else 2, near))
     elif cls == "thin_diagonal":
         length, width = rng.uniform(300, 600), rng.uniform(1, 3)
         ang = rng.uniform(0.2, 1.3) * (1 if rng.random() < 0.5 else -1)
-        cx, cy = _center(rng, hotspots, length / 2 + 5)
+        cx, cy = _center(rng, hotspots, length / 2 + 5, near)
         ux, uy = math.cos(ang) * length / 2, math.sin(ang) * length / 2
         nx, ny = -math.sin(ang) * width / 2, math.cos(ang) * width / 2
         ring = [
@@ -192,7 +198,7 @@ def make_query(rng, cls: str, hotspots) -> dict:
         ]
         q["mode"], q["geometry"] = "polygon", rings_wkt([ring + [ring[0]]])
     elif cls == "polyline_buffer":
-        cx, cy = _center(rng, hotspots, 150)
+        cx, cy = _center(rng, hotspots, 150, near)
         pts = [(cx, cy)]
         for _ in range(4):
             px, py = pts[-1]
@@ -217,7 +223,7 @@ def make_query(rng, cls: str, hotspots) -> dict:
         y = _r2(rng.uniform(Y0, Y1 - 100))
         q["geometry"] = [x, _r2(x + 100), y, _r2(y + 100)]
     elif cls == "knn":
-        cx, cy = _center(rng, hotspots, 1)
+        cx, cy = _center(rng, hotspots, 1, near)
         q["mode"], q["geometry"], q["k"] = "nn", [cx, cy], KNN_K
     else:
         raise ValueError(f"unknown shape class {cls!r}")
@@ -227,12 +233,17 @@ def make_query(rng, cls: str, hotspots) -> dict:
 def query_stream(rng, hotspots, n: int) -> list[dict]:
     """Cycles through the shape classes in a fixed order, so a run cut
     after any number of queries samples the same class mix whatever
-    the seed; the seed moves the geometry."""
-    return [make_query(rng, SHAPE_CLASSES[i % len(SHAPE_CLASSES)], hotspots) for i in range(n)]
+    the seed; the seed moves the geometry. Which queries sit near a
+    hotspot is fixed too: alternate classes within a cycle, and each
+    class in alternate cycles, so that one seed's run does not land
+    more of its few queries on the dense clusters than another's."""
+    k = len(SHAPE_CLASSES)
+    return [make_query(rng, SHAPE_CLASSES[i % k], hotspots, near=(i // k + i % k) % 2 == 0)
+            for i in range(n)]
 
 
 def make_batch(rng, kind: str, hotspots) -> dict:
-    """One table-valued request: 64 windows, 64 poses or 16 zones."""
+    """One table-valued request: 64 windows, 64 poses or 8 zones."""
     if kind == "multi_bbox":
         wins = []
         for i in range(BATCH_WINDOWS):
@@ -319,7 +330,9 @@ def generate(seed: int, sizes: Sizes, out_dir: str) -> dict:
         "hotspots": [[_r2(x), _r2(y)] for x, y in hotspots],
         "queries": query_stream(rng, hotspots, sizes.queries),
         "batches": batch_stream(rng, hotspots, sizes.batches),
+        # run before measuring
         "warmup": [make_query(rng, c, hotspots) for c in WARMUP_CLASSES],
+        "warmup_batches": [make_batch(rng, k, hotspots) for k in BATCH_KINDS],
     }
     with open(os.path.join(out_dir, "manifest.json"), "w") as f:
         json.dump(manifest, f, sort_keys=True)

@@ -5,7 +5,8 @@ Each predicate repeats the engine's arithmetic in the same order
 agree bit for bit rather than within a tolerance. An answer is
 compared as (row count, order-independent checksum of the (x, y, z)
 rows). The block layout is compared after the same quantize → Morton
-decode round trip the engine applies (FIXTURES.md §5).
+decode round trip the engine applies (FIXTURES.md §5). A batch request
+(``multi_window``) is compared per window, pose or zone.
 """
 
 from __future__ import annotations
@@ -24,13 +25,14 @@ def _mix(h: np.ndarray) -> np.ndarray:
     return h ^ (h >> np.uint64(31))
 
 
-def checksum(x, y, z) -> tuple[int, int]:
-    """(count, sum of per-row hashes mod 2^64) — independent of row order."""
-    cols = [np.ascontiguousarray(np.asarray(a, dtype=np.float64) + 0.0) for a in (x, y, z)]
+def checksum(*columns) -> tuple[int, int]:
+    """(count, sum of per-row hashes mod 2^64) over equal-length
+    columns — independent of row order."""
+    cols = [np.ascontiguousarray(np.asarray(a, dtype=np.float64) + 0.0) for a in columns]
     with np.errstate(over="ignore"):
         h = _mix(cols[0].view(np.uint64))
-        h = _mix(h ^ cols[1].view(np.uint64))
-        h = _mix(h ^ cols[2].view(np.uint64))
+        for c in cols[1:]:
+            h = _mix(h ^ c.view(np.uint64))
         return len(cols[0]), int(np.sum(h, dtype=np.uint64))
 
 
@@ -164,3 +166,69 @@ class Oracle:
     def expect(self, q: dict) -> tuple[int, int]:
         rows = self.select(q)
         return checksum(rows[:, 0], rows[:, 1], rows[:, 2])
+
+    # -- batch requests (multi_window) -----------------------------------
+    def _stats(self, idx: np.ndarray) -> tuple:
+        """(n, z_min, z_max, z_avg) as ``zonal_stats`` computes them,
+        from exact centi-unit integers."""
+        zq = np.rint(self.xyz[idx, 2] * 100).astype(np.int64)
+        return len(zq), zq.min() / 100.0, zq.max() / 100.0, int(zq.sum()) / (len(zq) * 100.0)
+
+    def expect_batch(self, b: dict):
+        """The answer to one batch request (generator dict): for
+        ``multi_bbox`` and ``zonal`` {id: (n, z_min, z_max[, z_avg])} over
+        the non-empty windows or zones; for ``knn_join`` the checksum
+        of the (q_id, x, y, z) rows."""
+        kind = b["kind"]
+        if kind == "multi_bbox":
+            out = {}
+            for win_id, x0, x1, y0, y1 in b["windows"]:
+                idx = self._window(float(x0), float(x1), float(y0), float(y1))
+                if len(idx):
+                    out[int(win_id)] = (len(idx), self.xyz[idx, 2].min(), self.xyz[idx, 2].max())
+            return out
+        if kind == "zonal":
+            out = {}
+            for zone_id, wkt in b["zones"]:
+                rings = parse_rings(wkt)
+                xs = [p[0] for ring in rings for p in ring]
+                ys = [p[1] for ring in rings for p in ring]
+                idx = self._window(min(xs), max(xs), min(ys), max(ys))
+                idx = idx[_even_odd(rings, self.xyz[idx, 0], self.xyz[idx, 1])]
+                if len(idx):
+                    out[int(zone_id)] = self._stats(idx)
+            return out
+        if kind == "knn_join":
+            r = float(b["radius"])
+            parts = []
+            for q_id, qx, qy in b["poses"]:
+                qx, qy = float(qx), float(qy)
+                idx = self._window(qx - r, qx + r, qy - r, qy + r)
+                x, y, z = self.xyz[idx, 0], self.xyz[idx, 1], self.xyz[idx, 2]
+                d2 = (x - qx) * (x - qx) + (y - qy) * (y - qy)
+                keep = d2 <= r * r
+                order = np.lexsort((z[keep], y[keep], x[keep], d2[keep]))[: int(b["k"])]
+                rows = self.xyz[idx[keep][order]]
+                parts.append(np.column_stack([np.full(len(rows), float(q_id)), rows]))
+            rows = np.concatenate(parts) if parts else np.empty((0, 4))
+            return checksum(*rows.T)
+        raise ValueError(f"unknown batch kind {kind!r}")
+
+
+def batch_answer(kind: str, pdf):
+    """An engine batch result (pandas) in the form ``expect_batch`` gives."""
+    if kind == "knn_join":
+        return checksum(pdf["q_id"], pdf["x"], pdf["y"], pdf["z"])
+    key = "win_id" if kind == "multi_bbox" else "zone_id"
+    cols = ["n_points", "z_min", "z_max"] + (["z_avg"] if kind == "zonal" else [])
+    return {int(row[0]): tuple(row[1:]) for row in pdf[[key, *cols]].itertuples(index=False)}
+
+
+def same_batch(kind: str, got, want) -> bool:
+    """Exact, except ``zonal``'s z_avg, which the engine rounds to six
+    decimals."""
+    if kind != "zonal":
+        return got == want
+    return got.keys() == want.keys() and all(
+        got[k][:3] == want[k][:3] and abs(got[k][3] - want[k][3]) <= 1e-6 for k in want
+    )

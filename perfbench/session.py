@@ -31,7 +31,7 @@ def heap_mb(total_mb: int) -> int:
 
 
 def start_session(root: str, work: str):
-    """Start (or restart) the benchmark session; ``root`` is the
+    """Start the benchmark session; ``root`` is the
     checkout holding ``lasdb_spark``, ``work`` the scratch directory."""
     from pyspark.sql import SparkSession
 
@@ -43,10 +43,7 @@ def start_session(root: str, work: str):
     paths = [root] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
     os.environ["PYTHONPATH"] = os.pathsep.join(dict.fromkeys(paths))
     mem = heap_mb(total_mb)
-    # a fixed-size, pre-touched heap: the peak RSS then moves with the
-    # JVM's other memory and the Python client, not with when the
-    # collector chose to grow or touch the heap
-    java_opts = f"-Xms{mem}m -XX:+AlwaysPreTouch -Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+    java_opts = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("lasdb_perfbench")
@@ -68,24 +65,41 @@ def start_session(root: str, work: str):
     return spark
 
 
+#: rows of the reference job; on a calm 4-CPU VM it takes about
+#: ``REFERENCE_MS``
+REFERENCE_ROWS = 200_000
+REFERENCE_MS = 150.0
+
+
+def reference_job(spark, i: int) -> None:
+    """A fixed Spark SQL job that runs no ``lasdb_spark`` code: planning,
+    code generation (``i`` changes a literal, so each call compiles new
+    code, as each window query does), one task per core and a shuffle.
+    Its time tracks the host's speed, not the program's."""
+    cpus = machine_size()[0]
+    rows = (
+        spark.range(0, REFERENCE_ROWS, numPartitions=cpus)
+        .selectExpr("id % 101 AS k", f"id * 0.5 + {i} AS v")
+        .where(f"v > {i % 7}")
+        .groupBy("k")
+        .count()
+        .collect()
+    )
+    if len(rows) != 101:
+        raise AssertionError(f"reference job returned {len(rows)} groups, not 101")
+
+
 def stop_session(spark) -> None:
-    """Stop the session and the JVM behind it, and wait for the JVM to
-    exit (it also takes its Python worker daemons down)."""
+    """Stop the session and wait for the JVM behind it to exit (it
+    takes its Python worker daemons down): ``spark.stop()`` alone
+    leaves the JVM running until this process exits."""
     import subprocess
 
-    from pyspark import SparkContext
-
-    gateway = SparkContext._gateway
-    proc = getattr(gateway, "proc", None)
+    proc = spark.sparkContext._gateway.proc
     spark.stop()
-    if gateway is not None:
-        gateway.shutdown()
-        # the next session in this process launches a fresh JVM
-        SparkContext._gateway = SparkContext._jvm = None
-    if proc is not None:
-        proc.stdin.close()
-        try:
-            proc.wait(timeout=60)
-        except subprocess.TimeoutExpired:
-            proc.kill()
-            proc.wait()
+    proc.stdin.close()  # the JVM exits when its stdin closes
+    try:
+        proc.wait(timeout=60)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        proc.wait()

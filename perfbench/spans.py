@@ -128,17 +128,19 @@ def _metric(node, key: str) -> int:
 
 
 def plan_counts(df) -> dict:
-    """Scan and unpack counts from the executed plan of ``df`` (valid
-    after an action ran on that same DataFrame)."""
+    """Scan, unpack and join counts from the executed plan of ``df``
+    (valid after an action ran on that same DataFrame)."""
     nodes: list = []
     _plan_nodes(df._jdf.queryExecution().executedPlan(), nodes)
-    out = {"files_read": 0, "rows_scanned": 0, "rows_unpacked": 0}
+    out = {"files_read": 0, "rows_scanned": 0, "rows_unpacked": 0, "join_rows": 0}
     for name, node in nodes:
         if name == "FileSourceScanExec":
             out["files_read"] += _metric(node, "numFiles")
             out["rows_scanned"] += _metric(node, "numOutputRows")
         elif name == "GenerateExec":
             out["rows_unpacked"] += _metric(node, "numOutputRows")
+        elif name == "BroadcastHashJoinExec":
+            out["join_rows"] += _metric(node, "numOutputRows")
     return out
 
 

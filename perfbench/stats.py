@@ -35,3 +35,21 @@ def quartiles(values) -> tuple[float, float, float]:
     """(q1, median, q3) as ``statistics.quantiles(values, n=4)`` gives them."""
     q1, q2, q3 = statistics.quantiles(values, n=4)
     return q1, q2, q3
+
+
+def class_medians(samples) -> dict[str, float]:
+    """Median of each class's values, from ``(class, value)`` pairs."""
+    by_cls: dict[str, list[float]] = {}
+    for cls, v in samples:
+        by_cls.setdefault(cls, []).append(v)
+    return {c: statistics.median(v) for c, v in by_cls.items()}
+
+
+def mix_latency(samples) -> tuple[float, float]:
+    """(geometric mean, requests per unit time) of a request mix from
+    ``(class, latency)`` pairs. Each class counts once, by its median,
+    so a run that fits more requests of one class in its time, or
+    meets one slow outlier, keeps the same mix. The rate is that of a
+    closed loop sending one request of every class in turn."""
+    med = class_medians(samples)
+    return statistics.geometric_mean(med.values()), len(med) / sum(med.values())

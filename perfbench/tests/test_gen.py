@@ -35,6 +35,9 @@ def test_streams_cover_every_shape_class(tmp_path):
     assert {q["cls"] for q in m["queries"]} == set(gen.SHAPE_CLASSES)
     assert {b["kind"] for b in m["batches"]} == set(gen.BATCH_KINDS)
     assert [q["cls"] for q in m["queries"][:14]] == list(gen.SHAPE_CLASSES)
+    assert [q["cls"] for q in m["warmup"]] == list(gen.WARMUP_CLASSES)
+    assert {q["mode"] for q in m["warmup"]} == {q["mode"] for q in m["queries"]}
+    assert [b["kind"] for b in m["warmup_batches"]] == list(gen.BATCH_KINDS)
 
 
 def test_tiles_hold_the_cloud_on_the_las_grid(tmp_path):
