@@ -1,4 +1,4 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query surface of the engine, each entry checked against DuckDB.
 
 ``entry(spark)`` — flagship bbox window query at sf0.001.
 ``queries()``   — one entry per implemented operator (SURVEY.md §2).
@@ -3308,22 +3308,10 @@ def oracle_sql() -> dict[str, str]:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """258 entries, ordered so every query gets a driver CORRECTNESS
-    row over a rolling window: the driver checks ~50 entries per round
-    in dict order. Round-13 rotation (_R13_LEAD — the committed r12
-    drain promise; no new entries and no entry's RESULTS changed this
-    round): the 13 r7 leftovers lead (rel_top_supplier … rel_acf,
-    original dict order — the stalest standing driver rows, r7), then
-    the backlog strictly by staleness computed over all twelve
-    CORRECTNESS files: the 37 oldest r8-era rows (pc_contours …
-    pc_slope, original dict order) — 50 exactly. The cut line falls
-    inside the r8 block, so the post-r13 staleness floor is r8 and the
-    remaining r8 rows drain next. Everything past the window keeps its
-    standing green row from a prior round AND is re-proven value-exact
-    and type-faithful every test run by the all-entries oracle mirror
-    (tests/test_entry_oracle.py). (The r12 derivation lives on
-    _R12_LEAD below, kept for the docstring trail.)"""
-    base = {
+    """258 entries, one per implemented operator. Each has a DuckDB
+    twin in :func:`oracle_sql`, and tests/test_entry_oracle.py checks
+    every entry against its twin, value-exact and type-faithful."""
+    return {
         # --- new in r9 (first driver rows) ---
         "doc_search_hybrid": _q_doc_search_hybrid,
         "emb_mmr": _q_emb_mmr,
@@ -3593,222 +3581,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _q_doc_search_hybrid_multi_stored_ann,
         "doc_search_bm25_appended": _q_doc_search_bm25_appended,
     }
-    out = {name: base[name] for name in _R13_LEAD}
-    out.update(base)
-    return out
-
-
-#: r13 window lead — see the queries() docstring for the derivation.
-_R13_LEAD = (
-    # the 13 r7 leftovers (original dict order; stalest driver rows)
-    "rel_top_supplier",
-    "rel_small_qty",
-    "rel_dormant_balance",
-    "mm_phash_pairs",
-    "rel_kcore",
-    "stream_conversions",
-    "mm_audio_fp_pairs",
-    "text_collocations",
-    "rel_forecast_revenue",
-    "entity_matches",
-    "rel_cusum",
-    "rel_ivm_rollup",
-    "rel_acf",
-    # the 37 oldest r8-era rows, original dict order
-    "pc_contours",
-    "text_bpe_encode",
-    "rel_k_anonymity",
-    "text_kn_scores",
-    "rel_benford",
-    "rel_forecast_backtest",
-    "ann_index_append",
-    "stream_sessions",
-    "corpus_shards",
-    "quality_calibration",
-    "pc_segments",
-    "text_fuzzy_decontaminate",
-    "text_lang_mix",
-    "emb_whiten",
-    "corpus_report",
-    "dedup_index_probe",
-    "text_fertility",
-    "stream_curate",
-    "rel_ab_test",
-    "pc_segment_shape",
-    "stream_windows_append",
-    "emb_pca",
-    "emb_cov_pairs",
-    "dedup_spans",
-    "dedup_lsh_recall",
-    "pc_zonal_stats",
-    "text_repetition",
-    "text_decontaminate",
-    "pc_multi_window",
-    "pc_voxel_lod",
-    "pc_thin",
-    "doc_search",
-    "pc_knn_join",
-    "pc_hag",
-    "pc_outliers",
-    "corpus_token_budget",
-    "pc_slope",
-    # --- the 50-row window cut line falls here (entry #50 above) ---
-)
-
-
-#: r12 window lead — kept for the docstring trail; superseded by
-#: _R13_LEAD above.
-_R12_LEAD = (
-    # new r12 entries (first driver rows)
-    "doc_search_hybrid_multi_stored_ann",
-    "doc_search_bm25_appended",
-    # the entire remaining r6 block, original dict order
-    "rel_market_share",
-    "rel_skyline",
-    "rel_hourly_rollup",
-    "rel_asof_error_click",
-    "rel_json_extract",
-    "rel_event_funnel",
-    "rel_pricing_rollup",
-    "rel_set_ops",
-    "rel_exists_semijoin",
-    "rel_percentiles",
-    "rel_month_momentum",
-    "rel_distinct_customers",
-    "semdedup_keepers",
-    "text_bm25",
-    "rel_retention",
-    "text_surprisal",
-    "text_chunks",
-    "pc_lod_pyramid",
-    "pc_classify",
-    # the 29 oldest r7 entries, original dict order
-    "text_bpe_merges",
-    "rel_min_cost_supplier",
-    "rel_shipping_priority",
-    "ann_ivfpq_stored",
-    "mm_jpeg",
-    "emb_matryoshka",
-    "dedup_url_canonical",
-    "rel_local_supplier",
-    "rel_key_skew",
-    "rel_scd2",
-    "rel_profile",
-    "rel_bucketed_join",
-    "rel_order_priority",
-    "rel_nation_trade",
-    "rel_product_profit",
-    "rel_returned_items",
-    "rel_promo_share",
-    "rel_snapshot_diff",
-    "rel_triangles",
-    "pc_density",
-    "stream_cm_topk",
-    "text_perceptron",
-    "rel_brand_discounts",
-    "mm_silence",
-    "rel_big_orders",
-    "rel_json_profile",
-    "text_freq_spectrum",
-    "rel_mkt_share_q8",
-    "rel_cust_distribution",
-    # --- the 50-row window cut line falls here (entry #50 above) ---
-    # 13 r7 leftovers, drained in r13
-    "rel_top_supplier",
-    "rel_small_qty",
-    "rel_dormant_balance",
-    "mm_phash_pairs",
-    "rel_kcore",
-    "stream_conversions",
-    "mm_audio_fp_pairs",
-    "text_collocations",
-    "rel_forecast_revenue",
-    "entity_matches",
-    "rel_cusum",
-    "rel_ivm_rollup",
-    "rel_acf",
-)
-
-
-#: r11 window lead — kept for the docstring trail; superseded by
-#: _R12_LEAD above.
-_R11_LEAD = (
-    # new r11 entries (first driver rows)
-    "doc_search_bm25_stored",
-    "doc_search_hybrid_stored",
-    "doc_search_hybrid_multi_stored",
-    "text_index_stats",
-    # results changed: sampled recall audit (r10 VERDICT #3)
-    "ann_knn_join_recall",
-    # the entire remaining r5 block, original dict order
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_clusters",
-    "dedup_keepers",
-    "dedup_embedding",
-    "ann_topk",
-    "ann_lsh_topk",
-    "ann_knn_join",
-    "ann_ivf_topk",
-    "ann_ivf_trained",
-    "mm_features",
-    "rel_pricing_summary",
-    "rel_revenue_by_nation",
-    "rel_top_orders_per_customer",
-    "rel_sessionize_events",
-    # the 28 oldest r6 entries, original dict order
-    "text_bpe_tokens",
-    "dedup_embedding_lsh",
-    "ann_lsh_multiprobe",
-    "ann_knn_join_multiprobe",
-    "mm_resize",
-    "mm_frame_sample",
-    "sketch_hll",
-    "sketch_quantiles",
-    "ann_pq_trained",
-    "ann_ivfpq",
-    "stream_quantiles",
-    "text_bpe_pairs",
-    "corpus_importance",
-    "ann_recall_report",
-    "stream_enriched_counts",
-    "rel_rate_anomalies",
-    "mm_scene_cuts",
-    "pc_volume",
-    "ann_ivfpq_trained",
-    "pc_circle",
-    "pc_polygon_l",
-    "pc_polygon_hole",
-    "pc_bbox_block",
-    "pc_histogram",
-    "pc_grid_zstats",
-    "pc_metadata_agg",
-    "rel_supplier_volume",
-    "rel_anti_join",
-    # --- the 50-row window cut line falls here (entry #50 above) ---
-    # 19 r6 leftovers, drained in r12
-    "rel_market_share",
-    "rel_skyline",
-    "rel_hourly_rollup",
-    "rel_asof_error_click",
-    "rel_json_extract",
-    "rel_event_funnel",
-    "rel_pricing_rollup",
-    "rel_set_ops",
-    "rel_exists_semijoin",
-    "rel_percentiles",
-    "rel_month_momentum",
-    "rel_distinct_customers",
-    "semdedup_keepers",
-    "text_bm25",
-    "rel_retention",
-    "text_surprisal",
-    "text_chunks",
-    "pc_lod_pyramid",
-    "pc_classify",
-)
 
 
 def entry(spark: SparkSession) -> DataFrame:

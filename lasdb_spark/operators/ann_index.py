@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .ingest import _recover_swap, _recover_swap_ro, _swap_dir
 from .similarity import (
     EMB_DIM,
     IVF_CELLS,
@@ -499,62 +500,6 @@ def knn_join_ivf_stored(
         F.col("cell").cast("long").alias("cid"),
     )
     return _knn_join_from_ranked(assign, k, nprobe)
-
-
-def _swap_dir(tmp: str, target: str) -> None:
-    """Side-dir + two-rename directory swap, shared by both index
-    compactors (:func:`compact_ann_index` and
-    :func:`~.dedup_index.compact_dedup_index`).
-
-    Crash contract (r10 ADVICE, honestly stated): the swap is NOT a
-    single atomic step — between ``rename(target, target_old)`` and
-    ``rename(tmp, target)`` the table directory is briefly absent, so
-    a crash inside that window leaves the data stranded in
-    ``*_old``. :func:`_recover_swap` (run on entry here and by the
-    compactors) repairs both failure shapes before the next attempt:
-    a missing target with a surviving ``*_old`` is renamed back, and
-    a stale ``*_compacting``/``*_old`` leftover is removed so the
-    renames cannot collide. Compactors call it BEFORE writing the
-    side dir (here, ``tmp`` is usually ``*_compacting`` itself, so
-    recovery inside the swap would destroy the fresh write — only
-    the stale-``*_old`` guard runs here). Crash BEFORE the first
-    rename (the whole side-dir write) leaves the original
-    untouched."""
-    import shutil
-
-    old = target + "_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(target, old)
-    os.rename(tmp, target)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _recover_swap(target: str) -> None:
-    """Repair leftovers of an interrupted :func:`_swap_dir` run: if
-    the target vanished mid-swap, restore it from ``*_old``;
-    otherwise drop stale ``*_old`` / ``*_compacting`` side dirs so a
-    fresh compaction's renames can't fail on them. MAINTENANCE-ONLY:
-    the unconditional side-dir deletion would destroy another
-    process's in-flight compaction — read paths use
-    :func:`_recover_swap_ro` instead."""
-    import shutil
-
-    _recover_swap_ro(target)
-    shutil.rmtree(target + "_old", ignore_errors=True)
-    shutil.rmtree(target + "_compacting", ignore_errors=True)
-
-
-def _recover_swap_ro(target: str) -> None:
-    """READ-ONLY half of :func:`_recover_swap` (r11 ADVICE): restore a
-    target that vanished mid-swap from its surviving ``*_old``, but
-    never delete side dirs — safe to run on every stored read without
-    racing a concurrent maintenance op's in-flight ``*_compacting``
-    write. (Truly concurrent reads DURING a swap's two-rename window
-    remain unsupported — the rename-back can collide with the
-    swapper's second rename; this only repairs CRASHED swaps.)"""
-    old = target + "_old"
-    if not os.path.exists(target) and os.path.exists(old):
-        os.rename(old, target)
 
 
 def compact_ann_index(spark: SparkSession, path: str) -> None:

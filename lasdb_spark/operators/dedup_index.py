@@ -129,7 +129,7 @@ def _recover_dedup_swaps(path: str) -> None:
     """Read-only swap recovery (root + tables) before the first read
     — the recover-before-read discipline shared with the text and ANN
     indexes."""
-    from .ann_index import _recover_swap_ro
+    from .ingest import _recover_swap_ro
 
     _recover_swap_ro(path)
     for table in DEDUP_TABLES:
@@ -302,9 +302,9 @@ def compact_dedup_index(spark: SparkSession, path: str) -> None:
     table; after many increments every probe pays per-file open cost
     on buckets/shingles/sizes). Each table is rewritten — shuffled by
     its probe-join key so co-access stays clustered — through the
-    shared :func:`~.ann_index._swap_dir` side-dir + rename swap (see
+    shared :func:`~.ingest._swap_dir` side-dir + rename swap (see
     its docstring for the exact two-rename crash window;
-    :func:`~.ann_index._recover_swap` runs per table on entry to
+    :func:`~.ingest._recover_swap` runs per table on entry to
     repair an interrupted prior run). Content is untouched, so
     compact(build + append) == build(all) down to probe results —
     pytest-pinned. Maintenance-window op: don't run it concurrently
@@ -325,7 +325,7 @@ def compact_dedup_index(spark: SparkSession, path: str) -> None:
     folded), never a double-counting state."""
     import shutil
 
-    from .ann_index import _recover_swap, _swap_dir
+    from .ingest import _recover_swap, _swap_dir
 
     _recover_swap(path)
     for table in DEDUP_TABLES:

@@ -22,6 +22,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -305,6 +306,46 @@ def record_path(base_path: str, name: str) -> str:
     return os.path.join(base_path, f"pc_record_{name}")
 
 
+def _swap_dir(tmp: str, target: str) -> None:
+    """Replace directory ``target`` by ``tmp`` with two renames through
+    ``<target>_old``.
+
+    The swap is not one atomic step: between the two renames the
+    target is absent and its data sits in ``<target>_old``. A crash
+    there is repaired by :func:`_recover_swap` (maintenance) or
+    :func:`_recover_swap_ro` (reads), which rename it back. A crash
+    before the first rename leaves the target untouched. A stale
+    ``<target>_old`` is removed first so the first rename cannot fail
+    on it; ``tmp`` is usually ``<target>_compacting``, so the full
+    recovery must run before ``tmp`` is written, not here."""
+    old = target + "_old"
+    shutil.rmtree(old, ignore_errors=True)
+    os.rename(target, old)
+    os.rename(tmp, target)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _recover_swap(target: str) -> None:
+    """Repair what an interrupted :func:`_swap_dir` left: restore a
+    missing target from ``<target>_old``, then drop stale
+    ``<target>_old`` / ``<target>_compacting`` side directories.
+    Maintenance only: the deletion would destroy another process's
+    in-flight compaction, so read paths use :func:`_recover_swap_ro`."""
+    _recover_swap_ro(target)
+    shutil.rmtree(target + "_old", ignore_errors=True)
+    shutil.rmtree(target + "_compacting", ignore_errors=True)
+
+
+def _recover_swap_ro(target: str) -> None:
+    """Read-side half of :func:`_recover_swap`: restore a target that
+    vanished mid-swap from its surviving ``<target>_old``, and never
+    delete anything. Reads that run during a live swap's two-rename
+    window are not supported; this repairs crashed swaps only."""
+    old = target + "_old"
+    if not os.path.exists(target) and os.path.exists(old):
+        os.rename(old, target)
+
+
 def compact_dataset(
     spark: SparkSession,
     base_path: str,
@@ -316,12 +357,13 @@ def compact_dataset(
     appended micro-batch files are each key-sorted but overlap, so
     row-group pruning degrades until a compaction pass).
 
-    Writes to a side directory and swaps, so a crash mid-compaction
-    leaves the original data intact. At scale this runs per key-range
-    slice (only rewrite slices whose file count exceeds a threshold)."""
-    import shutil
-
+    Writes to a side directory and swaps with :func:`_swap_dir`, after
+    :func:`_recover_swap` repairs what an earlier crashed compaction
+    left, so a crash at any point leaves every row recoverable. At
+    scale this runs per key-range slice (only rewrite slices whose
+    file count exceeds a threshold)."""
     path = record_path(base_path, name)
+    _recover_swap(path)
     df = spark.read.parquet(path)
     if target_partitions:
         # same data-size cap as ingest_points: the count on a bare
@@ -341,10 +383,7 @@ def compact_dataset(
         .write.mode("overwrite")
         .parquet(tmp)
     )
-    old = path + "_old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    _swap_dir(tmp, path)
     # appended data may have extended the extent: re-derive planning
     # metadata from what is actually stored (bbox, count, grid width).
     # A bare key-sorted table with no metadata row compacts fine and
@@ -406,7 +445,9 @@ def load_metadata(base_path: str, name: str) -> tuple[DatasetMeta, str]:
 
 def load_dataset(spark: SparkSession, base_path: str, name: str) -> tuple[DataFrame, DatasetMeta, str]:
     meta, layout = load_metadata(base_path, name)
-    df = spark.read.parquet(os.path.join(base_path, f"pc_record_{name}"))
+    path = record_path(base_path, name)
+    _recover_swap_ro(path)
+    df = spark.read.parquet(path)
     return df, meta, layout
 
 

@@ -53,7 +53,7 @@ reads (× 1 + n_segments until the next compaction — compact after
 every few dozen increments). Compaction and re-bucketing
 (:func:`rebucket_text_index`, triggered by
 :func:`text_index_needs_rebucket`) share the root-level side-dir swap
-of :func:`~.ann_index._swap_dir`.
+of :func:`~.ingest._swap_dir`.
 """
 
 from __future__ import annotations
@@ -268,7 +268,7 @@ def _recover_index_swaps(path: str) -> None:
     ``spark.read.parquet`` throws path-not-found, not after).
 
     READ-ONLY recovery (r11 ADVICE): rename-back only, via
-    :func:`~.ann_index._recover_swap_ro` — a stored query running
+    :func:`~.ingest._recover_swap_ro` — a stored query running
     while a compaction/rebucket is in flight can no longer delete the
     maintainer's ``*_compacting`` side dir. Covers both the ROOT-level
     swap (:func:`compact_text_index` / :func:`rebucket_text_index`
@@ -276,7 +276,7 @@ def _recover_index_swaps(path: str) -> None:
     layouts. Truly concurrent reads DURING a swap's two-rename window
     remain unsupported (documented on the maintenance ops); this
     repairs CRASHED swaps only."""
-    from .ann_index import _recover_swap_ro
+    from .ingest import _recover_swap_ro
 
     _recover_swap_ro(path)
     for table in ("postings", "df", "stats"):
@@ -765,11 +765,11 @@ def _rewrite_index_root(
     removal: a crash mid-fold leaves either the old root (with its
     segments) or the new one (segments folded) — never a state where
     postings were folded but segments still double-count
-    (:func:`~.ann_index._swap_dir` crash window; read-only recovery
+    (:func:`~.ingest._swap_dir` crash window; read-only recovery
     on every stored read repairs a stranded root)."""
     import shutil
 
-    from .ann_index import _recover_swap, _swap_dir
+    from .ingest import _recover_swap, _swap_dir
 
     _recover_swap(path)  # full cleanup: stale root-level side dirs
     for table in ("postings", "df", "stats"):

@@ -20,6 +20,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -43,6 +44,7 @@ from ..pcsfc.range_search import (
 from .ingest import DatasetMeta, unpack_blocks
 
 RESULT_COLS = ("x", "y", "z")
+KNN_SCHEMA = "x double, y double, z double, d2 double"
 
 
 def head_lookup(df: DataFrame, heads, meta: DatasetMeta, layout: str = "flat") -> DataFrame:
@@ -199,7 +201,9 @@ class WindowQuerier:
         the k nearest (count ≥ k AND kth distance ≤ half-width), then
         top-k via orderBy(...).limit(k) — Spark executes that as a
         distributed TakeOrdered, not a full sort. Ties broken by
-        (d2, x, y, z) for determinism."""
+        (d2, x, y, z) for determinism. The last round's collected rows
+        are the answer, returned as a local DataFrame so the caller's
+        action does not run the search again."""
         px, py = float(point[0]), float(point[1])
         d2 = (F.col("x") - px) * (F.col("x") - px) + (F.col("y") - py) * (
             F.col("y") - py
@@ -213,9 +217,8 @@ class WindowQuerier:
 
         while True:
             cand = self._pruned(px - r, px + r, py - r, py + r, minz, maxz)
-            cand = self._zslab(cand, minz, maxz).withColumn("d2", d2)
-            top = cand.orderBy("d2", "x", "y", "z").limit(k)
-            rows = top.collect()
+            cand = self._zslab(cand, minz, maxz).select(*RESULT_COLS, d2.alias("d2"))
+            rows = cand.orderBy("d2", "x", "y", "z").limit(k).collect()
             if len(rows) >= k and rows[-1].d2 <= r * r:
                 break
             # Exact-exit: once the window contains the entire data
@@ -226,8 +229,11 @@ class WindowQuerier:
             if px - r <= x0 and px + r >= x1 and py - r <= y0 and py + r >= y1:
                 break
             r *= 2.0
-        out = cand.orderBy("d2", "x", "y", "z").limit(k)
-        return out.select("x", "y", "z", F.col("d2").alias("d2"))
+        # through pandas so Arrow ships the rows as one LocalRelation; a
+        # list of Rows is parallelized as an RDD, which costs more than
+        # running the search again
+        answer = pd.DataFrame(rows, columns=[*RESULT_COLS, "d2"], dtype="float64")
+        return self.df.sparkSession.createDataFrame(answer, KNN_SCHEMA)
 
     def multi_bbox(self, windows, budget: int | None = None) -> DataFrame:
         """Per-window stats for a TABLE of bbox windows in one scan —

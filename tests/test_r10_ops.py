@@ -348,7 +348,7 @@ def test_swap_dir_recovery(tmp_path):
     (clear so the next compaction's renames can't collide)."""
     import os
 
-    from lasdb_spark.operators.ann_index import _recover_swap, _swap_dir
+    from lasdb_spark.operators.ingest import _recover_swap, _swap_dir
 
     target = str(tmp_path / "assign")
     os.makedirs(target)

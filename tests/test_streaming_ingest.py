@@ -162,3 +162,35 @@ def test_layout_report_detects_append_overlap(spark, sf_dir, tmp_path):
     rep3 = layout_report(spark, base, "layoutqa")
     assert rep3["overlap_files"] == 0
     assert rep3["n_rows"] == 2 * rep["n_rows"]
+
+
+@pytest.mark.spark
+def test_crashed_compaction_swap_loses_no_rows(spark, tmp_path):
+    """The two crash states of compaction's directory swap: a crash
+    between its renames leaves only ``<record>_old``, which a read must
+    restore; a crash after the second rename leaves a stale
+    ``<record>_old`` beside the live store, which the next compaction
+    must clear instead of failing on it."""
+    from lasdb_spark.operators.ingest import record_path
+
+    pts = spark.createDataFrame(
+        [(85000.0 + i, 446000.0 + 2 * i, float(i % 7)) for i in range(300)],
+        "x double, y double, z double",
+    )
+    base = str(tmp_path / "store")
+    ingest_points(pts, "crash", base)
+    path = record_path(base, "crash")
+
+    # crashed between the renames: only the old copy survives
+    os.rename(path, path + "_old")
+    df, _, _ = load_dataset(spark, base, "crash")
+    assert df.count() == 300
+    assert not os.path.exists(path + "_old")
+
+    # crashed after the second rename: a stale old copy stays behind
+    spark.read.parquet(path).write.parquet(path + "_old")
+    compact_dataset(spark, base, "crash", target_partitions=2)
+    df, _, _ = load_dataset(spark, base, "crash")
+    assert df.count() == 300
+    assert sorted(df.select("x", "y", "z").collect()) == sorted(pts.collect())
+    assert not os.path.exists(path + "_old")
