@@ -23,6 +23,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..pcsfc.sqlgen import double_sql as _d
+
 try:  # optional fast path
     import shapely  # noqa: F401
     from shapely import contains_xy as _shapely_contains_xy
@@ -156,28 +158,19 @@ def point_in_polygon_udf(wkt: str):
 
 
 def point_in_polygon_col(
-    rings: list[list[tuple[float, float]]], x: Column, y: Column
+    rings: list[list[tuple[float, float]]], x: str = "x", y: str = "y"
 ) -> Column:
-    """Even-odd containment as a NATIVE Column expression — one XOR
-    term per polygon edge, identical arithmetic to ``_contains_numpy``.
+    """Even-odd containment of columns ``x``, ``y`` as a NATIVE Column
+    expression — one XOR term per polygon edge, identical arithmetic to
+    ``_contains_numpy``: :func:`point_in_polygon_sql` parsed in one
+    call, so engine and oracle share one renderer.
 
     For the window-query workload polygons are small (tens of edges),
     so the whole test stays inside whole-stage codegen: no Python, no
     Arrow transfer, vectorized over the scan. Callers should fall back
     to :func:`point_in_polygon_udf` past ~``MAX_NATIVE_EDGES`` edges to
     keep the generated code within JIT limits."""
-    inside: Column = F.lit(False)
-    for ring in rings:
-        n = len(ring)
-        for i in range(n):
-            x1, y1 = ring[i]
-            x2, y2 = ring[(i + 1) % n]
-            if y1 == y2:
-                continue
-            crosses = (F.lit(y1) > y) != (F.lit(y2) > y)
-            xint = F.lit(x2 - x1) * (y - F.lit(y1)) / F.lit(y2 - y1) + F.lit(x1)
-            inside = inside != (crosses & (x < xint))
-    return inside
+    return F.expr(point_in_polygon_sql(rings, x, y))
 
 
 MAX_NATIVE_EDGES = 128
@@ -186,11 +179,10 @@ MAX_NATIVE_EDGES = 128
 def point_in_polygon_sql(
     rings: list[list[tuple[float, float]]], xcol: str = "x", ycol: str = "y"
 ) -> str:
-    """The SAME even-odd XOR chain as :func:`point_in_polygon_col`,
-    emitted as ANSI SQL with identical literals and operation order —
-    the generic oracle twin (the window-query oracles hand-derive
-    closed forms for their fixed test shapes; batch zonal joins need
-    arbitrary polygons)."""
+    """The even-odd XOR chain as SQL that Spark and DuckDB evaluate
+    alike: every literal is a DOUBLE (:func:`double_sql`), and the
+    operation order matches ``_contains_numpy``. Edges with y1 == y2
+    never cross and are skipped."""
     expr = "FALSE"
     for ring in rings:
         n = len(ring)
@@ -199,11 +191,8 @@ def point_in_polygon_sql(
             x2, y2 = ring[(i + 1) % n]
             if y1 == y2:
                 continue
-            crosses = f"(({y1!r} > {ycol}) <> ({y2!r} > {ycol}))"
-            xint = (
-                f"(({x2 - x1!r}) * ({ycol} - ({y1!r})) / ({y2 - y1!r})"
-                f" + ({x1!r}))"
-            )
+            crosses = f"(({_d(y1)} > {ycol}) <> ({_d(y2)} > {ycol}))"
+            xint = f"({_d(x2 - x1)} * ({ycol} - {_d(y1)}) / {_d(y2 - y1)} + {_d(x1)})"
             term = f"({crosses} AND ({xcol} < {xint}))"
             expr = f"({expr} <> {term})"
     return expr
@@ -236,41 +225,30 @@ def _segments(pts: list[tuple[float, float]]):
     return out
 
 
-def polyline_buffer_col(pts: list[tuple[float, float]], dist: float, x: Column, y: Column) -> Column:
-    """dist(point, polyline) ≤ dist as a native Column: OR over
-    segments of clamped point-to-segment distance² ≤ dist². All
-    constants precomputed; arithmetic order mirrors the SQL twin."""
-    d2max = F.lit(float(dist) * float(dist))
-    pred: Column | None = None
-    for ax, ay, dx, dy, l2 in _segments(pts):
-        if l2 == 0.0:
-            ddx, ddy = x - F.lit(ax), y - F.lit(ay)
-            seg = (ddx * ddx + ddy * ddy) <= d2max
-        else:
-            t = ((x - F.lit(ax)) * F.lit(dx) + (y - F.lit(ay)) * F.lit(dy)) / F.lit(l2)
-            tc = F.least(F.greatest(t, F.lit(0.0)), F.lit(1.0))
-            cx = F.lit(ax) + tc * F.lit(dx)
-            cy = F.lit(ay) + tc * F.lit(dy)
-            seg = ((x - cx) * (x - cx) + (y - cy) * (y - cy)) <= d2max
-        pred = seg if pred is None else (pred | seg)
-    assert pred is not None
-    return pred
+def polyline_buffer_col(
+    pts: list[tuple[float, float]], dist: float, x: str = "x", y: str = "y"
+) -> Column:
+    """dist(point, polyline) ≤ dist for columns ``x``, ``y`` as a native
+    Column: :func:`polyline_buffer_sql` parsed in one call."""
+    return F.expr(polyline_buffer_sql(pts, dist, x, y))
 
 
 def polyline_buffer_sql(pts: list[tuple[float, float]], dist: float, x: str = "x", y: str = "y") -> str:
-    """SQL twin of :func:`polyline_buffer_col` (same literals/order)."""
-    d2max = repr(float(dist) * float(dist))
+    """OR over segments of clamped point-to-segment distance² ≤ dist²,
+    as SQL with DOUBLE literals. All constants are precomputed in
+    Python, so every engine embeds identical values."""
+    d2max = _d(float(dist) * float(dist))
     terms = []
     for ax, ay, dx, dy, l2 in _segments(pts):
         if l2 == 0.0:
             terms.append(
-                f"(({x} - {ax!r})*({x} - {ax!r}) + ({y} - {ay!r})*({y} - {ay!r})) <= {d2max}"
+                f"((({x} - {_d(ax)})*({x} - {_d(ax)}) + ({y} - {_d(ay)})*({y} - {_d(ay)})) <= {d2max})"
             )
         else:
-            t = f"((({x} - {ax!r}) * {dx!r} + ({y} - {ay!r}) * {dy!r}) / {l2!r})"
-            tc = f"least(greatest({t}, 0.0), 1.0)"
-            cx = f"({ax!r} + {tc} * {dx!r})"
-            cy = f"({ay!r} + {tc} * {dy!r})"
+            t = f"((({x} - {_d(ax)}) * {_d(dx)} + ({y} - {_d(ay)}) * {_d(dy)}) / {_d(l2)})"
+            tc = f"least(greatest({t}, {_d(0.0)}), {_d(1.0)})"
+            cx = f"({_d(ax)} + {tc} * {_d(dx)})"
+            cy = f"({_d(ay)} + {tc} * {_d(dy)})"
             terms.append(
                 f"((({x} - {cx})*({x} - {cx}) + ({y} - {cy})*({y} - {cy})) <= {d2max})"
             )

@@ -29,15 +29,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pcsfc.columns import (
-    merge_key_col,
-    morton_decode_x_col,
-    morton_decode_y_col,
+    COMPACT_LUT,
+    compact2d_spark_sql,
     morton_encode_col,
     quantize_col,
     split_head_col,
     split_tail_col,
 )
 from ..pcsfc.morton import compute_split_length, quantize
+from ..pcsfc.sqlgen import double_sql
 
 METADATA_FILE = "_pc_metadata.json"
 
@@ -124,18 +124,6 @@ def attach_sfc(points: DataFrame, meta: DatasetMeta) -> DataFrame:
     )
 
 
-def decode_sfc(df: DataFrame, meta: DatasetMeta) -> DataFrame:
-    """Inverse transform: sfc_key → (x, y) on the original scale (F4, F7).
-
-    Used by the block-layout query path after unpacking."""
-    sx, sy, _ = meta.scales
-    ox, oy, _ = meta.offsets
-    key = F.col("sfc_key")
-    return df.withColumn(
-        "x", morton_decode_x_col(key).cast("double") * sx + ox
-    ).withColumn("y", morton_decode_y_col(key).cast("double") * sy + oy)
-
-
 def pack_blocks(df_sfc: DataFrame) -> DataFrame:
     """Block layout: one row per head, tails ascending, z co-sorted (G1–G3).
 
@@ -167,20 +155,33 @@ def pack_blocks(df_sfc: DataFrame) -> DataFrame:
 
 
 def unpack_blocks(blocks: DataFrame, meta: DatasetMeta) -> DataFrame:
-    """Inverse of pack_blocks: explode arrays, rebuild keys (Q4)."""
-    exploded = blocks.select(
-        "sfc_head", F.explode(F.arrays_zip("sfc_tail", "z")).alias("p")
-    ).select(
-        "sfc_head",
-        F.col("p.sfc_tail").alias("sfc_tail"),
-        F.col("p.z").alias("z"),
+    """Inverse of pack_blocks: one row per point with its rebuilt key
+    and decoded coordinates (Q4, F4, F7) — columns
+    ``sfc_head, sfc_tail, z, sfc_key, x, y``.
+
+    Every point is decoded INSIDE its block's arrays, before the
+    explode, so ``x``/``y`` are generator outputs: a later filter on
+    them cannot be pushed back through the decode and inline its
+    lookup chain once per reference (which blew block polygon plans
+    past Janino's 64 KB method limit). The decode is one SQL string,
+    parsed by the JVM in one call; the lookup table it indexes 16
+    times is a column, so its 256 literals are parsed once."""
+    t = meta.tail_length
+    sx, sy, _ = meta.scales
+    ox, oy, _ = meta.offsets
+    key = f"(shiftleft(sfc_head, {t}) | p.sfc_tail)"
+    gx = compact2d_spark_sql(key, lut="compact_lut")
+    gy = compact2d_spark_sql(f"shiftright({key}, 1)", lut="compact_lut")
+    point = (
+        "named_struct('sfc_tail', p.sfc_tail, 'z', p.z, "
+        f"'sfc_key', {key}, "
+        f"'x', CAST({gx} AS DOUBLE) * {double_sql(sx)} + {double_sql(ox)}, "
+        f"'y', CAST({gy} AS DOUBLE) * {double_sql(sy)} + {double_sql(oy)})"
     )
-    return decode_sfc(
-        exploded.withColumn(
-            "sfc_key",
-            merge_key_col(F.col("sfc_head"), F.col("sfc_tail"), meta.tail_length),
-        ),
-        meta,
+    return blocks.selectExpr(
+        "sfc_head", "sfc_tail", "z", f"{COMPACT_LUT} AS compact_lut"
+    ).selectExpr(
+        "sfc_head", f"inline(transform(arrays_zip(sfc_tail, z), p -> {point}))"
     )
 
 

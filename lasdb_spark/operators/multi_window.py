@@ -251,18 +251,18 @@ def zonal_stats(
     side derives its cell with one shift of the stored key, the join
     is a broadcast HASH join on cell equality, and the bbox refine
     runs map-side. The EXACT containment test is then a single CASE
-    over zone_id dispatching each zone's native even-odd expression —
-    still whole-stage codegen, no Python; the combined edge count is
-    capped (``MAX_NATIVE_EDGES`` per zone, same contract as the
-    single-polygon window path). z_avg uses exact centi-unit integer
-    sums (order-independent, hash-stable).
+    over zone_id dispatching each zone's native even-odd expression,
+    parsed from one SQL string — still whole-stage codegen, no Python;
+    the combined edge count is capped (``MAX_NATIVE_EDGES`` per zone,
+    same contract as the single-polygon window path). z_avg uses exact
+    centi-unit integer sums (order-independent, hash-stable).
 
     Scale: work is |points in covered cells| + |zones|; the zone table
     is bounded by the broadcast budget exactly like windows. Zones may
     overlap (points count toward each); empty zones are absent."""
     from ..functions.geometry import (
         MAX_NATIVE_EDGES,
-        point_in_polygon_col,
+        point_in_polygon_sql,
         polygon_bbox,
         wkt_rings,
     )
@@ -299,13 +299,14 @@ def zonal_stats(
     pts = unpack_blocks(df, meta) if layout == "block" else df
     lo = min(c for _, c, *_ in rows) << (2 * shift)
     hi = ((max(c for _, c, *_ in rows) + 1) << (2 * shift)) - 1
-    inside = None
-    for z, rings in rings_by_zone.items():
-        test = point_in_polygon_col(rings, F.col("x"), F.col("y"))
-        cond = F.when(F.col("zone_id") == z, test)
-        inside = cond if inside is None else inside.when(
-            F.col("zone_id") == z, test
+    inside = F.expr(
+        "CASE "
+        + " ".join(
+            f"WHEN zone_id = {z} THEN {point_in_polygon_sql(rings)}"
+            for z, rings in rings_by_zone.items()
         )
+        + " END"
+    )
     joined = (
         pts.filter(F.col("sfc_key").between(lo, hi))
         .withColumn("cell", F.shiftright(F.col("sfc_key"), 2 * shift))
@@ -329,8 +330,8 @@ def zonal_stats(
 
 def zonal_stats_sql(points_cte: str, zones) -> str:
     """Oracle twin: per-zone UNION ALL of brute-force aggregates, each
-    zone's containment from the generic even-odd SQL generator (same
-    literals and operation order as the native Column)."""
+    zone's containment from the even-odd SQL renderer the engine
+    parses too."""
     from ..functions.geometry import point_in_polygon_sql, wkt_rings
 
     tiers = []

@@ -70,7 +70,7 @@ def corridor_profile(
     within = points.filter(
         F.col("x").between(xmin, xmax)
         & F.col("y").between(ymin, ymax)
-        & polyline_buffer_col(pts, buffer, F.col("x"), F.col("y"))
+        & polyline_buffer_col(pts, buffer)
     )
     staged = within.select(
         "x", "y", "z", *station_stage_cols(pts, F.col("x"), F.col("y"))

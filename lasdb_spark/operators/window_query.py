@@ -168,7 +168,7 @@ class WindowQuerier:
         x0, x1, y0, y1 = rings_bbox(rings)
         n_edges = sum(len(r) for r in rings)
         if n_edges <= MAX_NATIVE_EDGES:
-            exact = point_in_polygon_col(rings, F.col("x"), F.col("y"))
+            exact = point_in_polygon_col(rings)
         else:
             exact = point_in_polygon_udf(wkt)(F.col("x"), F.col("y"))
         out = (
@@ -189,7 +189,7 @@ class WindowQuerier:
         out = (
             self._pruned(x0, x1, y0, y1, minz, maxz)
             .filter(F.col("x").between(x0, x1) & F.col("y").between(y0, y1))
-            .filter(polyline_buffer_col(pts, dist, F.col("x"), F.col("y")))
+            .filter(polyline_buffer_col(pts, dist))
         )
         return self._zslab(out, minz, maxz).select(*RESULT_COLS)
 

@@ -1,11 +1,15 @@
-"""Executor-side Morton/SFC arithmetic as native Spark Column expressions.
+"""Executor-side Morton/SFC arithmetic as native Spark expressions.
 
-Everything here compiles to JVM bitwise ops inside whole-stage codegen —
-NO Python UDFs on the hot path (the reference needed numba JIT for the
-same job: pcsfc/encoder.py:8, pcsfc/decoder.py:4; Spark's codegen makes
-that free). Mask constants are shared with the driver-side planner
-(:mod:`lasdb_spark.pcsfc.morton`) and the DuckDB-oracle SQL generator
-(:mod:`lasdb_spark.pcsfc.sqlgen`).
+Everything here compiles to JVM bitwise ops — NO Python UDFs on the
+hot path (the reference needed numba JIT for the same job:
+pcsfc/encoder.py:8, pcsfc/decoder.py:4). Two builders share one set of
+byte lookup tables: Column builders (``*_col``) for callers that hold
+Columns, and Spark SQL string builders (``*_spark_sql``) for callers
+that emit a whole expression as ONE string, parsed by the JVM in one
+call (:func:`lasdb_spark.operators.ingest.unpack_blocks`). Mask
+constants are shared with the driver-side planner
+(:mod:`lasdb_spark.pcsfc.morton`); the DuckDB-oracle twins live in
+:mod:`lasdb_spark.pcsfc.sqlgen`.
 """
 
 from __future__ import annotations
@@ -26,34 +30,41 @@ def _balanced_bitor(terms: list[Column]) -> Column:
     return _balanced_bitor(terms[:mid]).bitwiseOR(_balanced_bitor(terms[mid:]))
 
 
+def _balanced_bitor_sql(terms: list[str]) -> str:
+    """:func:`_balanced_bitor` over SQL fragments."""
+    if len(terms) == 1:
+        return terms[0]
+    mid = len(terms) // 2
+    return f"({_balanced_bitor_sql(terms[:mid])} | {_balanced_bitor_sql(terms[mid:])})"
+
+
 # The driver-side planner (morton.py) uses the classic magic-mask chain:
-# n = (n | (n << s)) & mask. As a Column tree that chain references its
-# input TWICE per step, so the expression DOUBLES each step — 2^5 = 32
-# inlined copies of the input — and whole-stage codegen emits code for
-# every copy. Fused with a filter + aggregate (block unpack, on-the-fly
-# encode), that overflows Janino's 64 KB per-method limit and the whole
-# stage silently drops to interpreted execution.
+# n = (n | (n << s)) & mask. As an expression tree that chain references
+# its input TWICE per step, so the expression DOUBLES each step — 2^5 =
+# 32 inlined copies of the input — and whole-stage codegen emits code
+# for every copy, which overflows Janino's 64 KB per-method limit.
 #
-# Here instead: byte-at-a-time lookup tables. The 256-entry tables are
-# literal arrays — constant-folded by Catalyst into a single ArrayData
-# object referenced from the generated class, NOT rebuilt per row — so
-# an expand is 4 lookups and a compact is 8, each referencing the input
-# once. Values are generated from the morton.py reference functions, so
-# Column/driver parity holds by construction (property-tested too).
+# Here instead: byte-at-a-time lookup tables, so an expand is 4 lookups
+# and a compact is 8, each referencing the input once. Each 256-entry
+# table is rendered ONCE, at import, as a SQL ``array(...)`` literal;
+# Catalyst constant-folds it into a single ArrayData object, not
+# rebuilt per row. A Column builder turns it into a Column with one
+# ``F.expr`` (one py4j call — ``F.lit(list)`` would cost one call per
+# element, 257 per table, on every query). Values are generated from
+# the morton.py reference functions, so parity holds by construction
+# (property-tested too).
 
 # expand2d of one input byte → 16-bit spread (x lane)
-_EXPAND_TABLE = [expand2d(b) for b in range(256)]
+EXPAND_LUT = "array(" + ", ".join(str(expand2d(b)) for b in range(256)) + ")"
 # compact of one key byte's even bit positions → 4 bits
-_COMPACT_TABLE = [compact2d(b & 0x55) for b in range(256)]
+COMPACT_LUT = "array(" + ", ".join(str(compact2d(b & 0x55)) for b in range(256)) + ")"
 
 
-def _byte_lut(c: Column, table: list[int], nbytes: int, out_shift: int) -> Column:
-    # F.lit(list) builds the literal lazily per call — it needs a live
-    # SparkSession, so it cannot be a module-level constant.
-    lut = F.lit(table)
+def _byte_lut(c: Column, lut_sql: str, nbytes: int, out_shift: int) -> Column:
+    lut = F.expr(lut_sql)
     return _balanced_bitor(
         [
-            # cast("long") is load-bearing: lit() infers array<int>, and
+            # cast("long") is load-bearing: the table is array<int>, and
             # shiftleft on INT wraps the shift amount mod 32.
             F.shiftleft(
                 F.get(
@@ -68,12 +79,26 @@ def _byte_lut(c: Column, table: list[int], nbytes: int, out_shift: int) -> Colum
 
 def expand2d_col(c: Column) -> Column:
     """Spread bits of a non-negative long onto even positions (F1)."""
-    return _byte_lut(c, _EXPAND_TABLE, nbytes=4, out_shift=16)
+    return _byte_lut(c, EXPAND_LUT, nbytes=4, out_shift=16)
 
 
 def compact2d_col(c: Column) -> Column:
     """Gather even bit positions back into a compact long (F3)."""
-    return _byte_lut(c, _COMPACT_TABLE, nbytes=8, out_shift=4)
+    return _byte_lut(c, COMPACT_LUT, nbytes=8, out_shift=4)
+
+
+def compact2d_spark_sql(e: str, lut: str) -> str:
+    """Spark SQL for compact2d (F3) of a BIGINT expression ``e``: the
+    terms of :func:`compact2d_col`. ``lut`` names a column holding
+    :data:`COMPACT_LUT`: bound once, the table's 256 literals are
+    parsed once, not once per lookup (~4 ms each in the SQL parser)."""
+    return _balanced_bitor_sql(
+        [
+            f"shiftleft(CAST({lut}[CAST(shiftright({e}, {8 * j}) & 255 AS INT)]"
+            f" AS BIGINT), {4 * j})"
+            for j in range(8)
+        ]
+    )
 
 
 def morton_encode_col(x: Column, y: Column) -> Column:

@@ -3,7 +3,8 @@
 Used to compose the DuckDB oracle queries (`__spark_entry__.oracle_sql`)
 so the oracle performs bit-for-bit the SAME arithmetic the Spark engine
 does. Generated from the same mask tables as the Column builders —
-a single source of truth for the Morton math.
+a single source of truth for the Morton math. :func:`double_sql`
+renders the literals of SQL text that both engines run.
 
 DuckDB specifics relied on (all ANSI-ish / widely portable):
 ``&``, ``|``, ``<<``, ``>>`` on BIGINT; ``round``; ``CAST``.
@@ -11,7 +12,23 @@ DuckDB specifics relied on (all ANSI-ish / widely portable):
 
 from __future__ import annotations
 
+import math
+
 from .morton import COMPACT_STEPS, EVEN_BITS, EXPAND_STEPS
+
+
+def double_sql(v: float) -> str:
+    """``v`` as a literal that Spark and DuckDB both read as the same
+    DOUBLE: Python's shortest round-trip digits in exponent form (a
+    plain ``1.5`` is a DECIMAL in both engines). Negative values are
+    parenthesized, so a preceding ``-`` never forms a ``--`` comment."""
+    v = float(v)
+    if not math.isfinite(v):
+        raise ValueError(f"no SQL literal for {v!r}")
+    r = repr(v)
+    if "e" not in r:
+        r += "E0"
+    return f"({r})" if r.startswith("-") else r
 
 
 def expand2d_sql(expr: str) -> str:

@@ -5,7 +5,6 @@ import math
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from lasdb_spark.functions.geometry import (
     _contains_numpy,
@@ -42,9 +41,7 @@ def test_native_polygon_matches_numpy(spark):
         [(float(a), float(b)) for a, b in zip(px, py)], "x double, y double"
     )
     got = (
-        df.withColumn(
-            "inside", point_in_polygon_col(rings, F.col("x"), F.col("y"))
-        )
+        df.withColumn("inside", point_in_polygon_col(rings))
         .orderBy("x", "y")
         .collect()
     )
@@ -79,9 +76,7 @@ def test_polyline_buffer_matches_numpy(spark):
     df = spark.createDataFrame(
         [(float(a), float(b)) for a, b in zip(px, py)], "x double, y double"
     )
-    got = df.withColumn(
-        "inside", polyline_buffer_col(pts, dist, F.col("x"), F.col("y"))
-    ).collect()
+    got = df.withColumn("inside", polyline_buffer_col(pts, dist)).collect()
     want = {(float(a), float(b)): bool(v) for a, b, v in zip(px, py, expected)}
     for r in got:
         assert want[(r.x, r.y)] == r.inside

@@ -74,6 +74,38 @@ def test_polygon_stays_native(stored):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert not _has_shuffle(plan)
 
+    # Block layout, under the suite's strict codegen: the holed polygon
+    # and a polyline buffer must compile (the decode used to be inlined
+    # per x/y reference, past Janino's 64 KB method limit), keep a small
+    # plan, and answer as the flat points do after the block's quantize
+    # round trip.
+    from lasdb_spark.operators.ingest import ingest_points, load_dataset
+    from lasdb_spark.operators.window_query import WindowQuerier
+    from lasdb_spark.pcsfc.columns import quantize_col
+
+    spark = stored.df.sparkSession
+    base = tempfile.mkdtemp(prefix="lasdb_plans_block_")
+    ingest_points(stored.df.select("x", "y", "z"), "b", base, layout="block")
+    block = WindowQuerier(*load_dataset(spark, base, "b"))
+    (sx, sy, _), (ox, oy, _) = block.meta.scales, block.meta.offsets
+    roundtrip = WindowQuerier(
+        stored.df.select(
+            (quantize_col(F.col("x"), sx, ox) * sx + ox).alias("x"),
+            (quantize_col(F.col("y"), sy, oy) * sy + oy).alias("y"),
+            "z",
+        ),
+        block.meta,
+    )
+    line = "LINESTRING (85100.5 446100.5, 85500.5 447000.5, 85900.5 446200.5)"
+    for query in (
+        lambda q: q.polygon(wkt),
+        lambda q: q.polyline_buffer(line, 40.25),
+    ):
+        got = query(block)
+        assert len(got._jdf.queryExecution().optimizedPlan().toString()) <= 50_000
+        rows = sorted(got.collect())
+        assert rows and rows == sorted(query(roundtrip).collect())
+
 
 @pytest.mark.spark
 def test_dimension_joins_broadcast(spark, sf_dir):

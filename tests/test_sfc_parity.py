@@ -74,6 +74,28 @@ def test_spark_columns_match_python(spark):
         assert (r.h, r.t) == morton.split_key(r.m, 12)
         assert r.mm == r.m
 
+    # block round trip: pack, then unpack's in-array decode, for an even
+    # and an odd tail length (the y lane starts mid-tail when it is odd)
+    from lasdb_spark.operators.ingest import (
+        DatasetMeta,
+        attach_sfc,
+        pack_blocks,
+        unpack_blocks,
+    )
+
+    pts = spark.createDataFrame(
+        [(float(x), float(y), float(i)) for i, (x, y) in enumerate(SAMPLES)],
+        "x double, y double, z double",
+    )
+    for tail in (12, 13):
+        meta = DatasetMeta("parity", 0, len(SAMPLES), 62 - tail, tail)
+        rows = unpack_blocks(pack_blocks(attach_sfc(pts, meta)), meta).collect()
+        assert len(rows) == len(SAMPLES)
+        for r in rows:
+            assert (r.x, r.y) == SAMPLES[int(r.z)], tail
+            assert (r.x, r.y) == morton.decode_morton_2d(r.sfc_key)
+            assert (r.sfc_head, r.sfc_tail) == morton.split_key(r.sfc_key, tail)
+
 
 @pytest.mark.spark
 def test_points_derivation_matches_duckdb(spark, sf_dir):
