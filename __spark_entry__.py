@@ -39,7 +39,6 @@ from lasdb_spark.operators import outliers as _outliers
 from lasdb_spark.operators import semdedup as _semdedup
 from lasdb_spark.operators import features as _features
 from lasdb_spark.operators import search as _search
-from lasdb_spark.operators import skyline as _skyline
 from lasdb_spark.operators import relational as _rel
 from lasdb_spark.operators import multimodal as _multimodal
 from lasdb_spark.operators import similarity as _similarity
@@ -1880,12 +1879,6 @@ def _q_rel_anti_join(spark, sf_dir):
     )
 
 
-def _q_rel_skyline(spark, sf_dir):
-    from lasdb_spark.operators.skyline import pareto_orders
-
-    return pareto_orders(_t(spark, sf_dir, "orders"))
-
-
 def _q_rel_market_share(spark, sf_dir):
     return _rel.nation_market_share(
         _t(spark, sf_dir, "orders"),
@@ -3253,7 +3246,6 @@ def oracle_sql() -> dict[str, str]:
         "rel_shipping_priority": _rel.shipping_priority_sql(),
         "rel_anti_join": _rel.customers_without_orders_sql(),
         "rel_market_share": _rel.nation_market_share_sql(),
-        "rel_skyline": _skyline.pareto_orders_sql(),
         "sketch_kmv": _sketch.kmv_distinct_sql(),
         "sketch_hll": _sketch.hll_distinct_sql(),
         "sketch_cm_tokens": _sketch.cm_heavy_hitters_sql(),
@@ -3308,7 +3300,7 @@ def oracle_sql() -> dict[str, str]:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """258 entries, one per implemented operator. Each has a DuckDB
+    """257 entries, one per implemented operator. Each has a DuckDB
     twin in :func:`oracle_sql`, and tests/test_entry_oracle.py checks
     every entry against its twin, value-exact and type-faithful."""
     return {
@@ -3504,7 +3496,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rel_supplier_volume": _q_rel_supplier_volume,
         "rel_anti_join": _q_rel_anti_join,
         "rel_market_share": _q_rel_market_share,
-        "rel_skyline": _q_rel_skyline,
         "rel_hourly_rollup": _q_rel_hourly,
         "rel_asof_error_click": _q_rel_asof,
         "rel_json_extract": _q_rel_json,

@@ -1,12 +1,15 @@
-"""Planar geometry: WKT polygon parsing + vectorized point-in-polygon.
+"""Planar geometry: WKT parsing + point-in-polygon and buffer predicates.
 
 Replaces the reference's PostGIS dependency (ST_Within / ST_DWithin,
 pipeline/retrieve_data.py:58-83) with:
-- a minimal WKT POLYGON parser (exterior ring + holes), public format;
-- an even-odd ray-casting containment test, vectorized with numpy and
-  shipped to executors as an Arrow-batched Pandas UDF — the ONLY Python
-  on the query hot path, and only for polygon queries. If shapely is
-  available it is used instead (faster C implementation).
+- minimal WKT POLYGON / MULTIPOLYGON / LINESTRING parsers;
+- an even-odd ray-casting containment test, rendered as one SQL
+  expression that Spark runs in whole-stage codegen and the DuckDB
+  oracle runs as is (:func:`point_in_polygon_sql`). Past
+  ``MAX_NATIVE_EDGES`` edges the same test runs vectorized with NumPy
+  in an Arrow-batched pandas UDF (:func:`point_in_polygon_udf`) — the
+  only Python a window query can put on the executor hot path;
+- the polyline-buffer and circle predicates, native likewise.
 
 Even-odd rule: including hole rings in the edge set automatically
 excludes hole interiors, so polygons with 1..n holes (reference
@@ -24,15 +27,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..pcsfc.sqlgen import double_sql as _d
-
-try:  # optional fast path
-    import shapely  # noqa: F401
-    from shapely import contains_xy as _shapely_contains_xy
-    from shapely.wkt import loads as _shapely_loads
-
-    HAVE_SHAPELY = True
-except Exception:  # pragma: no cover - container has no shapely
-    HAVE_SHAPELY = False
 
 _NUM = r"[-+]?\d+(?:\.\d+)?(?:[eE][-+]?\d+)?"
 
@@ -59,13 +53,6 @@ def parse_wkt_polygon(wkt: str) -> list[list[tuple[float, float]]]:
     if not rings:
         raise ValueError(f"empty POLYGON: {wkt[:60]!r}")
     return rings
-
-
-def polygon_bbox(rings: list[list[tuple[float, float]]]) -> tuple[float, float, float, float]:
-    """(x_min, x_max, y_min, y_max) of the exterior ring."""
-    xs = [p[0] for p in rings[0]]
-    ys = [p[1] for p in rings[0]]
-    return min(xs), max(xs), min(ys), max(ys)
 
 
 def parse_wkt_multipolygon(wkt: str) -> list[list[list[tuple[float, float]]]]:
@@ -138,17 +125,9 @@ def point_in_polygon_udf(wkt: str):
     (POLYGON or MULTIPOLYGON).
 
     The parsed ring list is captured in the closure (small, pickled once
-    per task) — no per-row parsing."""
+    per task) — no per-row parsing. The test is ``_contains_numpy``, the
+    same even-odd arithmetic as the native expression."""
     rings = wkt_rings(wkt)
-
-    if HAVE_SHAPELY:  # pragma: no cover
-        geom = _shapely_loads(wkt)
-
-        @F.pandas_udf(T.BooleanType())
-        def _contains(x: pd.Series, y: pd.Series) -> pd.Series:
-            return pd.Series(_shapely_contains_xy(geom, x.values, y.values))
-
-        return _contains
 
     @F.pandas_udf(T.BooleanType())
     def _contains(x: pd.Series, y: pd.Series) -> pd.Series:

@@ -36,7 +36,7 @@ from ..pcsfc.columns import (
     split_head_col,
     split_tail_col,
 )
-from ..pcsfc.morton import compute_split_length, quantize
+from ..pcsfc.morton import compute_split_length, encode_morton_2d, quantize
 from ..pcsfc.sqlgen import double_sql
 
 METADATA_FILE = "_pc_metadata.json"
@@ -64,17 +64,10 @@ class DatasetMeta:
         return math.ceil((self.head_length + self.tail_length) / 2)
 
 
-def compute_metadata(
-    points: DataFrame,
-    name: str,
-    srid: int = 28992,
-    scales: tuple[float, float, float] = (1.0, 1.0, 1.0),
-    offsets: tuple[float, float, float] = (0.0, 0.0, 0.0),
-    ratio: float = 0.7,
-) -> DatasetMeta:
+def _extent(points: DataFrame):
     """One distributed agg for count + bbox union (reference S4/G5,
-    pipeline/import_data.py:76-99) + the split-length rule (F8)."""
-    row = points.agg(
+    pipeline/import_data.py:76-99): a row (n, x0, x1, y0, y1, z0, z1)."""
+    return points.agg(
         F.count(F.lit(1)).alias("n"),
         F.min("x").alias("x0"),
         F.max("x").alias("x1"),
@@ -83,6 +76,18 @@ def compute_metadata(
         F.min("z").alias("z0"),
         F.max("z").alias("z1"),
     ).collect()[0]
+
+
+def compute_metadata(
+    points: DataFrame,
+    name: str,
+    srid: int = 28992,
+    scales: tuple[float, float, float] = (1.0, 1.0, 1.0),
+    offsets: tuple[float, float, float] = (0.0, 0.0, 0.0),
+    ratio: float = 0.7,
+) -> DatasetMeta:
+    """Count + bbox (:func:`_extent`) + the split-length rule (F8)."""
+    row = _extent(points)
     # Planning maxima MUST use the same HALF_UP rule as the executor
     # quantization (quantize_col / F.round): Python round() is banker's
     # rounding, and a .5 max landing one cell low can shrink grid_bits
@@ -183,6 +188,12 @@ def unpack_blocks(blocks: DataFrame, meta: DatasetMeta) -> DataFrame:
     ).selectExpr(
         "sfc_head", f"inline(transform(arrays_zip(sfc_tail, z), p -> {point}))"
     )
+
+
+def stored_points(df: DataFrame, meta: DatasetMeta, layout: str) -> DataFrame:
+    """A stored table as one row per point (``x, y, z, sfc_key`` among
+    its columns), whichever the layout."""
+    return unpack_blocks(df, meta) if layout == "block" else df
 
 
 def block_histogram(df_sfc: DataFrame) -> DataFrame:
@@ -412,20 +423,9 @@ def refresh_metadata(
     stores full keys so only the derived grid width matters)."""
     meta, layout = load_metadata(base_path, name)
     df = spark.read.parquet(record_path(base_path, name))
-    pts = unpack_blocks(df, meta) if layout == "block" else df
-    row = pts.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("x").alias("x0"),
-        F.max("x").alias("x1"),
-        F.min("y").alias("y0"),
-        F.max("y").alias("y1"),
-        F.min("z").alias("z0"),
-        F.max("z").alias("z1"),
-    ).collect()[0]
+    row = _extent(stored_points(df, meta, layout))
     meta.point_count = row.n
     meta.bbox = [row.x0, row.x1, row.y0, row.y1, row.z0, row.z1]
-    from ..pcsfc.morton import encode_morton_2d
-
     qx_max = quantize(row.x1, meta.scales[0], meta.offsets[0])
     qy_max = quantize(row.y1, meta.scales[1], meta.offsets[1])
     needed_bits = encode_morton_2d(int(qx_max), int(qy_max)).bit_length()

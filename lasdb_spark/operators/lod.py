@@ -36,11 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_int60_col, md5_int60_sql
-from .ingest import DatasetMeta, unpack_blocks
-
-
-def _points(df: DataFrame, meta: DatasetMeta, layout: str) -> DataFrame:
-    return unpack_blocks(df, meta) if layout == "block" else df
+from .ingest import DatasetMeta, stored_points
 
 
 def voxel_downsample(
@@ -51,7 +47,7 @@ def voxel_downsample(
     units), plus the cell's occupancy count."""
     if level < 0:
         raise ValueError(f"level must be >= 0, got {level}")
-    pts = _points(df, meta, layout)
+    pts = stored_points(df, meta, layout)
     return (
         pts.withColumn("cell", F.shiftright(F.col("sfc_key"), 2 * level))
         .groupBy("cell")
@@ -114,7 +110,7 @@ def lod_pyramid(
     lv = sorted(set(int(l) for l in levels))
     if lv[0] < 0:
         raise ValueError(f"levels must be >= 0, got {levels}")
-    pts = _points(df, meta, layout)
+    pts = stored_points(df, meta, layout)
     cur = (
         pts.withColumn("cell", F.shiftright(F.col("sfc_key"), 2 * lv[0]))
         .groupBy("cell")
@@ -175,7 +171,7 @@ def thin_points(
     cut is reproduced by any engine with MD5."""
     if denom < 1:
         raise ValueError(f"denom must be >= 1, got {denom}")
-    pts = _points(df, meta, layout)
+    pts = stored_points(df, meta, layout)
     keep = md5_int60_col(F.col("sfc_key").cast("string")) % denom == 0
     return pts.filter(keep).select("x", "y", "z")
 

@@ -27,23 +27,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.geometry import (
+    MAX_NATIVE_EDGES,
+    point_in_polygon_sql,
+    rings_bbox,
+    wkt_rings,
+)
 from ..pcsfc.morton import encode_morton_2d
 from ..pcsfc.range_search import planning_grid_bounds
-from .ingest import DatasetMeta, unpack_blocks
+from .ingest import DatasetMeta, stored_points
 
 #: max total covering cells across all windows — bounds the broadcast
 #: table (a few MB) and the per-point join fan-out
-DEFAULT_CELL_BUDGET = 4096
+CELL_BUDGET = 4096
 
 _STATS_SCHEMA = "win_id long, n_points long, z_min double, z_max double"
 
 
-def plan_window_cells(
-    windows, meta: DatasetMeta, budget: int = DEFAULT_CELL_BUDGET
-) -> tuple[int, list[tuple]]:
+def plan_window_cells(windows, meta: DatasetMeta) -> tuple[int, list[tuple]]:
     """Driver-side planning: choose the FINEST shared cell level whose
-    total covering-cell count fits ``budget``, and emit one row per
-    (window, covering cell).
+    total covering-cell count fits ``CELL_BUDGET``, and emit one row
+    per (window, covering cell).
 
     Returns (shift_s, rows) where cell side length is ``2**shift_s``
     grid units and rows are (win_id, cell, x0, x1, y0, y1) with the
@@ -72,7 +76,7 @@ def plan_window_cells(
             ((qx1 >> s) - (qx0 >> s) + 1) * ((qy1 >> s) - (qy0 >> s) + 1)
             for *_, qx0, qx1, qy0, qy1 in qwins
         )
-        if total <= budget:
+        if total <= CELL_BUDGET:
             shift = s
             break
     rows = []
@@ -85,12 +89,34 @@ def plan_window_cells(
     return shift, rows
 
 
+def _cell_join(
+    df: DataFrame, meta: DatasetMeta, layout: str, windows, table, schema: str
+) -> DataFrame | None:
+    """The stored points of the cells ``windows`` cover, each joined to
+    the rows of the windows that cover its cell; None when no window
+    meets the data grid.
+
+    ``table`` maps one planned row (win_id, cell, x0, x1, y0, y1) to a
+    row of the broadcast cell table, whose ``schema`` names the
+    ``cell`` column. The coarse global key range is pushed to the
+    Parquet scan, so row groups wholly outside the union of windows
+    are never read; the cell is one shift of the stored key."""
+    shift, rows = plan_window_cells(windows, meta)
+    if not rows:
+        return None
+    cdf = df.sparkSession.createDataFrame([table(r) for r in rows], schema)
+    lo = min(r[1] for r in rows) << (2 * shift)
+    hi = ((max(r[1] for r in rows) + 1) << (2 * shift)) - 1
+    return (
+        stored_points(df, meta, layout)
+        .filter(F.col("sfc_key").between(lo, hi))
+        .withColumn("cell", F.shiftright(F.col("sfc_key"), 2 * shift))
+        .join(F.broadcast(cdf), "cell")
+    )
+
+
 def multi_bbox_stats(
-    df: DataFrame,
-    meta: DatasetMeta,
-    windows,
-    layout: str = "flat",
-    budget: int = DEFAULT_CELL_BUDGET,
+    df: DataFrame, meta: DatasetMeta, windows, layout: str = "flat"
 ) -> DataFrame:
     """(win_id, n_points, z_min, z_max) for every window holding at
     least one point — one scan, broadcast cell join, one aggregation.
@@ -99,32 +125,24 @@ def multi_bbox_stats(
     Windows may overlap (a point then counts toward each); empty
     windows are absent from the result (inner join semantics, matching
     a GROUP BY over the coordinate join)."""
-    spark = df.sparkSession
-    shift, rows = plan_window_cells(windows, meta, budget)
-    if not rows:
-        return spark.createDataFrame([], _STATS_SCHEMA)
-    cdf = spark.createDataFrame(
-        rows, "win_id long, cell long, wx0 double, wx1 double, "
-        "wy0 double, wy1 double"
+    joined = _cell_join(
+        df, meta, layout, windows, lambda r: r,
+        "win_id long, cell long, wx0 double, wx1 double, "
+        "wy0 double, wy1 double",
     )
-    pts = unpack_blocks(df, meta) if layout == "block" else df
-    # coarse global key range: pushed to the Parquet scan so row groups
-    # wholly outside the union of windows are never read
-    lo = min(r[1] for r in rows) << (2 * shift)
-    hi = ((max(r[1] for r in rows) + 1) << (2 * shift)) - 1
-    joined = (
-        pts.filter(F.col("sfc_key").between(lo, hi))
-        .withColumn("cell", F.shiftright(F.col("sfc_key"), 2 * shift))
-        .join(F.broadcast(cdf), "cell")
-        .filter(
+    if joined is None:
+        return df.sparkSession.createDataFrame([], _STATS_SCHEMA)
+    return (
+        joined.filter(
             F.col("x").between(F.col("wx0"), F.col("wx1"))
             & F.col("y").between(F.col("wy0"), F.col("wy1"))
         )
-    )
-    return joined.groupBy("win_id").agg(
-        F.count(F.lit(1)).alias("n_points"),
-        F.min("z").alias("z_min"),
-        F.max("z").alias("z_max"),
+        .groupBy("win_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_points"),
+            F.min("z").alias("z_min"),
+            F.max("z").alias("z_max"),
+        )
     )
 
 
@@ -135,7 +153,6 @@ def point_knn_join(
     k: int,
     radius: float,
     layout: str = "flat",
-    budget: int = DEFAULT_CELL_BUDGET,
 ) -> DataFrame:
     """Batch spatial kNN join: for EVERY query point, its ``k`` nearest
     cloud points within ``radius`` — "nearest returns per sensor
@@ -161,29 +178,19 @@ def point_knn_join(
         raise ValueError(f"need radius > 0 and k >= 1, got {radius}, {k}")
     qrows = [(int(q), float(x), float(y)) for q, x, y in queries]
     windows = [(q, x - r, x + r, y - r, y + r) for q, x, y in qrows]
-    spark = df.sparkSession
-    shift, rows = plan_window_cells(windows, meta, budget)
-    out_schema = "q_id long, x double, y double, z double, d2 double"
-    if not rows:
-        return spark.createDataFrame([], out_schema)
     centers = {q: (x, y) for q, x, y in qrows}
-    cdf = spark.createDataFrame(
-        [(q, cell, centers[q][0], centers[q][1]) for q, cell, *_ in rows],
+    cand = _cell_join(
+        df, meta, layout, windows, lambda row: (row[0], row[1], *centers[row[0]]),
         "q_id long, cell long, qx double, qy double",
     )
-    pts = unpack_blocks(df, meta) if layout == "block" else df
-    lo = min(c for _, c, *_ in rows) << (2 * shift)
-    hi = ((max(c for _, c, *_ in rows) + 1) << (2 * shift)) - 1
+    if cand is None:
+        return df.sparkSession.createDataFrame(
+            [], "q_id long, x double, y double, z double, d2 double"
+        )
     d2 = (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx")) + (
         F.col("y") - F.col("qy")
     ) * (F.col("y") - F.col("qy"))
-    cand = (
-        pts.filter(F.col("sfc_key").between(lo, hi))
-        .withColumn("cell", F.shiftright(F.col("sfc_key"), 2 * shift))
-        .join(F.broadcast(cdf), "cell")
-        .withColumn("d2", d2)
-        .filter(F.col("d2") <= r * r)
-    )
+    cand = cand.withColumn("d2", d2).filter(F.col("d2") <= r * r)
     from pyspark.sql import Window
 
     w = Window.partitionBy("q_id").orderBy("d2", "x", "y", "z")
@@ -238,7 +245,6 @@ def zonal_stats(
     meta: DatasetMeta,
     zones,
     layout: str = "flat",
-    budget: int = DEFAULT_CELL_BUDGET,
 ) -> DataFrame:
     """(zone_id, n_points, z_min, z_max, z_avg) for a TABLE of polygon
     zones — classic GIS zonal statistics ("stats per parcel /
@@ -246,11 +252,11 @@ def zonal_stats(
 
     ``zones`` is an iterable of (zone_id, wkt) where wkt is a POLYGON
     (holes allowed) or MULTIPOLYGON. Plan shape =
-    :func:`multi_bbox_stats`: every zone's bbox maps to covering cells
-    of one shared Morton level (driver-side pure planning), the points
-    side derives its cell with one shift of the stored key, the join
-    is a broadcast HASH join on cell equality, and the bbox refine
-    runs map-side. The EXACT containment test is then a single CASE
+    :func:`multi_bbox_stats`: every zone's bbox over all its rings maps
+    to covering cells of one shared Morton level (driver-side pure
+    planning), the points side derives its cell with one shift of the
+    stored key, and the join is a broadcast HASH join on cell
+    equality. The EXACT containment test is then a single CASE
     over zone_id dispatching each zone's native even-odd expression,
     parsed from one SQL string — still whole-stage codegen, no Python;
     the combined edge count is capped (``MAX_NATIVE_EDGES`` per zone,
@@ -260,14 +266,6 @@ def zonal_stats(
     Scale: work is |points in covered cells| + |zones|; the zone table
     is bounded by the broadcast budget exactly like windows. Zones may
     overlap (points count toward each); empty zones are absent."""
-    from ..functions.geometry import (
-        MAX_NATIVE_EDGES,
-        point_in_polygon_sql,
-        polygon_bbox,
-        wkt_rings,
-    )
-
-    spark = df.sparkSession
     rings_by_zone = {}
     windows = []
     for zone_id, wkt in zones:
@@ -284,21 +282,15 @@ def zonal_stats(
             # still joined (double-counting points) — refuse instead.
             raise ValueError(f"duplicate zone_id {zone_id}")
         rings_by_zone[int(zone_id)] = rings
-        x0, x1, y0, y1 = polygon_bbox(rings)
-        windows.append((int(zone_id), x0, x1, y0, y1))
-    shift, rows = plan_window_cells(windows, meta, budget)
-    out_schema = (
-        "zone_id long, n_points long, z_min double, z_max double, "
-        "z_avg double"
+        windows.append((int(zone_id), *rings_bbox(rings)))
+    cand = _cell_join(
+        df, meta, layout, windows, lambda r: r[:2], "zone_id long, cell long"
     )
-    if not rows:
-        return spark.createDataFrame([], out_schema)
-    cdf = spark.createDataFrame(
-        [(z, cell) for z, cell, *_ in rows], "zone_id long, cell long"
-    )
-    pts = unpack_blocks(df, meta) if layout == "block" else df
-    lo = min(c for _, c, *_ in rows) << (2 * shift)
-    hi = ((max(c for _, c, *_ in rows) + 1) << (2 * shift)) - 1
+    if cand is None:
+        return df.sparkSession.createDataFrame(
+            [], "zone_id long, n_points long, z_min double, z_max double, "
+            "z_avg double"
+        )
     inside = F.expr(
         "CASE "
         + " ".join(
@@ -307,12 +299,7 @@ def zonal_stats(
         )
         + " END"
     )
-    joined = (
-        pts.filter(F.col("sfc_key").between(lo, hi))
-        .withColumn("cell", F.shiftright(F.col("sfc_key"), 2 * shift))
-        .join(F.broadcast(cdf), "cell")
-        .filter(inside)
-    )
+    joined = cand.filter(inside)
     zq = F.round(F.col("z") * 100).cast("long")
     return (
         joined.select("zone_id", zq.alias("zq"))
@@ -332,8 +319,6 @@ def zonal_stats_sql(points_cte: str, zones) -> str:
     """Oracle twin: per-zone UNION ALL of brute-force aggregates, each
     zone's containment from the even-odd SQL renderer the engine
     parses too."""
-    from ..functions.geometry import point_in_polygon_sql, wkt_rings
-
     tiers = []
     for zone_id, wkt in zones:
         pip = point_in_polygon_sql(wkt_rings(wkt))

@@ -9,10 +9,16 @@ re-expressed as ONE lazy DataFrame pipeline per query:
     write/return: a DataFrame — no intermediate materialization,
     no client round-trips, no DELETE-based refinement (SURVEY §2.6).
 
+Every window shape (bbox, circle, polygon, polyline buffer) runs this
+one loop (``WindowQuerier._window``); a shape supplies only its prune
+window and its exact predicate.
+
 At 100 TB the pruning predicate is what matters: the sorted-by-key
 layout means a small window touches a handful of row groups; the exact
-refine runs only on the surviving rows, JVM-side (codegen) for
-bbox/circle/z, Arrow-batched pandas UDF only for polygons.
+refine runs only on the surviving rows, JVM-side (whole-stage codegen)
+for every shape. The one exception is a polygon with more than
+``MAX_NATIVE_EDGES`` edges, whose containment runs in an Arrow-batched
+pandas UDF.
 """
 
 from __future__ import annotations
@@ -42,9 +48,16 @@ from ..pcsfc.range_search import (
     planning_grid_bounds,
 )
 from .ingest import DatasetMeta, unpack_blocks
+from .multi_window import multi_bbox_stats, point_knn_join, zonal_stats
 
 RESULT_COLS = ("x", "y", "z")
 KNN_SCHEMA = "x double, y double, z double, d2 double"
+# ≤64 ranges keeps every query on the OR-of-BETWEENs path: the whole
+# predicate pushes into the Parquet scan (row-group pruning) and per-row
+# evaluation stays in codegen. More ranges only sharpen pruning
+# marginally while forcing the range-join fallback, whose broadcast
+# nested-loop comparison costs O(rows × ranges).
+MAX_RANGES = 64
 
 
 def head_lookup(df: DataFrame, heads, meta: DatasetMeta, layout: str = "flat") -> DataFrame:
@@ -52,25 +65,22 @@ def head_lookup(df: DataFrame, heads, meta: DatasetMeta, layout: str = "flat") -
     reference pokes these with raw SQL via Postgres.execute_query,
     db/__init__.py:109-115; here it is a first-class engine call).
 
-    ``heads`` is a list of sfc_head ints. Flat layout derives the head
-    from the stored key (one shift — stays in codegen and the derived
-    range check still prunes row groups because head ranges ARE key
-    ranges); block layout hits the sfc_head column directly with an
-    IN-list that pushes to the Parquet scan."""
-    heads = [int(h) for h in heads]
-    if layout == "block":
-        return unpack_blocks(df.filter(F.col("sfc_head").isin(heads)), meta)
+    ``heads`` is a list of sfc_head ints. The heads become merged head
+    ranges, applied like a window's key ranges: to the sfc_head column
+    on the block layout, and as key ranges [lo << t, (hi+1) << t) on
+    the flat layout's SORTED key column, so row-group stats skip cold
+    blocks (an isin() on the derived head, key >> t, would not push)."""
     t = meta.tail_length
-    # per-head key range [h << t, (h+1) << t): pushable range predicates
-    # on the SORTED key column, so row-group stats skip cold blocks —
-    # an isin() on the derived (h = key >> t) column would not push.
-    pred = None
-    for h in heads:
-        term = F.col("sfc_key").between(h << t, ((h + 1) << t) - 1)
-        pred = term if pred is None else pred | term
-    if pred is None:
-        return df.filter(F.lit(False))
-    return df.filter(pred)
+    # each head as a one-head range, sorted and merged with its neighbours
+    head_ranges = key_ranges_to_head_ranges([(int(h), int(h)) for h in heads], 0)
+    if layout == "block":
+        return unpack_blocks(apply_key_ranges(df, "sfc_head", head_ranges), meta)
+    key_ranges = [(lo << t, ((hi + 1) << t) - 1) for lo, hi in head_ranges]
+    return apply_key_ranges(df, "sfc_key", key_ranges)
+
+
+def _in_box(x0: float, x1: float, y0: float, y1: float):
+    return F.col("x").between(x0, x1) & F.col("y").between(y0, y1)
 
 
 @dataclass
@@ -83,12 +93,6 @@ class WindowQuerier:
     df: DataFrame
     meta: DatasetMeta
     layout: str = "flat"
-    # ≤64 ranges keeps every query on the OR-of-BETWEENs path: the
-    # whole predicate pushes into the Parquet scan (row-group pruning)
-    # and per-row evaluation stays in codegen. More ranges only sharpen
-    # pruning marginally while forcing the range-join fallback, whose
-    # broadcast nested-loop comparison costs O(rows × ranges).
-    max_ranges: int = 64
 
     # -- planning ---------------------------------------------------------
     def _key_ranges(self, x0: float, x1: float, y0: float, y1: float):
@@ -97,7 +101,7 @@ class WindowQuerier:
         qx0, qx1 = planning_grid_bounds(x0, x1, sx, ox)
         qy0, qy1 = planning_grid_bounds(y0, y1, sy, oy)
         return decompose_bbox(
-            qx0, qx1, qy0, qy1, bits=self.meta.grid_bits, max_ranges=self.max_ranges
+            qx0, qx1, qy0, qy1, bits=self.meta.grid_bits, max_ranges=MAX_RANGES
         )
 
     def _pruned(
@@ -138,22 +142,26 @@ class WindowQuerier:
             df = df.filter(F.col("z") <= float(maxz))
         return df
 
+    def _window(self, window, refine, minz, maxz) -> DataFrame:
+        """The filter–refine loop every window shape shares: candidates
+        pruned by the ``window`` (x0, x1, y0, y1), each ``refine``
+        predicate applied in order, then the z-slab."""
+        out = self._pruned(*window, minz, maxz)
+        for pred in refine:
+            out = out.filter(pred)
+        return self._zslab(out, minz, maxz).select(*RESULT_COLS)
+
     # -- query surface (Q6-Q11) -------------------------------------------
     def bbox(self, bbox, minz=None, maxz=None) -> DataFrame:
         """bbox = [x_min, x_max, y_min, y_max] (Q6)."""
-        x0, x1, y0, y1 = (float(v) for v in bbox)
-        out = self._pruned(x0, x1, y0, y1, minz, maxz).filter(
-            F.col("x").between(x0, x1) & F.col("y").between(y0, y1)
-        )
-        return self._zslab(out, minz, maxz).select(*RESULT_COLS)
+        window = tuple(float(v) for v in bbox)
+        return self._window(window, [_in_box(*window)], minz, maxz)
 
     def circle(self, center, radius, minz=None, maxz=None) -> DataFrame:
         """center = [cx, cy] (Q7): circumscribing-bbox prune + exact."""
         cx, cy, r = float(center[0]), float(center[1]), float(radius)
-        out = self._pruned(cx - r, cx + r, cy - r, cy + r, minz, maxz).filter(
-            circle_predicate(F.col("x"), F.col("y"), cx, cy, r)
-        )
-        return self._zslab(out, minz, maxz).select(*RESULT_COLS)
+        exact = circle_predicate(F.col("x"), F.col("y"), cx, cy, r)
+        return self._window((cx - r, cx + r, cy - r, cy + r), [exact], minz, maxz)
 
     def polygon(self, wkt: str, minz=None, maxz=None) -> DataFrame:
         """WKT POLYGON with holes, or MULTIPOLYGON (Q8): bbox prune +
@@ -165,18 +173,12 @@ class WindowQuerier:
         for geometries up to MAX_NATIVE_EDGES edges; bigger ones fall
         back to the Arrow-batched pandas UDF."""
         rings = wkt_rings(wkt)
-        x0, x1, y0, y1 = rings_bbox(rings)
-        n_edges = sum(len(r) for r in rings)
-        if n_edges <= MAX_NATIVE_EDGES:
+        window = rings_bbox(rings)
+        if sum(len(r) for r in rings) <= MAX_NATIVE_EDGES:
             exact = point_in_polygon_col(rings)
         else:
             exact = point_in_polygon_udf(wkt)(F.col("x"), F.col("y"))
-        out = (
-            self._pruned(x0, x1, y0, y1, minz, maxz)
-            .filter(F.col("x").between(x0, x1) & F.col("y").between(y0, y1))
-            .filter(exact)
-        )
-        return self._zslab(out, minz, maxz).select(*RESULT_COLS)
+        return self._window(window, [_in_box(*window), exact], minz, maxz)
 
     def polyline_buffer(self, wkt: str, dist: float, minz=None, maxz=None) -> DataFrame:
         """All points within ``dist`` of a WKT LINESTRING (the reference
@@ -185,13 +187,9 @@ class WindowQuerier:
         fully native: OR over per-segment clamped distance² terms)."""
         pts = parse_wkt_linestring(wkt)
         dist = float(dist)
-        x0, x1, y0, y1 = polyline_bbox(pts, dist)
-        out = (
-            self._pruned(x0, x1, y0, y1, minz, maxz)
-            .filter(F.col("x").between(x0, x1) & F.col("y").between(y0, y1))
-            .filter(polyline_buffer_col(pts, dist))
-        )
-        return self._zslab(out, minz, maxz).select(*RESULT_COLS)
+        window = polyline_bbox(pts, dist)
+        exact = polyline_buffer_col(pts, dist)
+        return self._window(window, [_in_box(*window), exact], minz, maxz)
 
     def knn(self, point, k: int, minz=None, maxz=None) -> DataFrame:
         """k nearest neighbours of [px, py] (Q11 — declared but NOT
@@ -235,37 +233,19 @@ class WindowQuerier:
         answer = pd.DataFrame(rows, columns=[*RESULT_COLS, "d2"], dtype="float64")
         return self.df.sparkSession.createDataFrame(answer, KNN_SCHEMA)
 
-    def multi_bbox(self, windows, budget: int | None = None) -> DataFrame:
+    def multi_bbox(self, windows) -> DataFrame:
         """Per-window stats for a TABLE of bbox windows in one scan —
         the batch spatial-join shape (see
         :mod:`lasdb_spark.operators.multi_window`). ``windows`` =
         iterable of (win_id, x_min, x_max, y_min, y_max)."""
-        from .multi_window import DEFAULT_CELL_BUDGET, multi_bbox_stats
+        return multi_bbox_stats(self.df, self.meta, windows, layout=self.layout)
 
-        return multi_bbox_stats(
-            self.df,
-            self.meta,
-            windows,
-            layout=self.layout,
-            budget=budget or DEFAULT_CELL_BUDGET,
-        )
-
-    def knn_join(
-        self, queries, k: int, radius: float, budget: int | None = None
-    ) -> DataFrame:
+    def knn_join(self, queries, k: int, radius: float) -> DataFrame:
         """k nearest points within ``radius`` for EVERY (q_id, qx, qy)
         query in one scan (see
         :func:`lasdb_spark.operators.multi_window.point_knn_join`)."""
-        from .multi_window import DEFAULT_CELL_BUDGET, point_knn_join
-
         return point_knn_join(
-            self.df,
-            self.meta,
-            queries,
-            k,
-            radius,
-            layout=self.layout,
-            budget=budget or DEFAULT_CELL_BUDGET,
+            self.df, self.meta, queries, k, radius, layout=self.layout
         )
 
     def voxel_lod(self, level: int) -> DataFrame:
@@ -289,18 +269,10 @@ class WindowQuerier:
 
         return lod_pyramid(self.df, self.meta, levels, layout=self.layout)
 
-    def zonal(self, zones, budget: int | None = None) -> DataFrame:
+    def zonal(self, zones) -> DataFrame:
         """Per-polygon-zone stats in one scan (see
         :func:`lasdb_spark.operators.multi_window.zonal_stats`)."""
-        from .multi_window import DEFAULT_CELL_BUDGET, zonal_stats
-
-        return zonal_stats(
-            self.df,
-            self.meta,
-            zones,
-            layout=self.layout,
-            budget=budget or DEFAULT_CELL_BUDGET,
-        )
+        return zonal_stats(self.df, self.meta, zones, layout=self.layout)
 
     def query(
         self, mode: str, geometry, minz=None, maxz=None, k: int | None = None

@@ -190,17 +190,6 @@ def test_curation_ops_plan_shapes(spark, sf_dir):
 
 
 @pytest.mark.spark
-def test_skyline_plan_shape(spark, sf_dir):
-    """The skyline must finish with a broadcast dominance anti-join and
-    never rank through a partition-less window."""
-    from lasdb_spark.operators.skyline import pareto_orders
-
-    plan = _plan(pareto_orders(spark.read.parquet(f"{sf_dir}/orders.parquet")))
-    assert "BroadcastNestedLoopJoin" in plan and "LeftAnti" in plan
-    assert not _partitionless_windows(plan)
-
-
-@pytest.mark.spark
 def test_scan_prunes_columns(spark, sf_dir):
     """A 2-column projection must not read the whole documents table."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

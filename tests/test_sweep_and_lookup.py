@@ -250,10 +250,17 @@ def test_zonal_stats_match_per_polygon_queries(spark, sf_dir):
             "85500.005 446799.995, 85500.005 446500.005))"),  # hole
         (3, "POLYGON ((10.0 10.0, 20.0 10.0, 20.0 20.0, 10.0 20.0, "
             "10.0 10.0))"),  # empty (outside extent)
+        # two members, the second outside the first's bbox: the prune
+        # window must cover every member
+        (4, "MULTIPOLYGON (((85100.005 446100.005, 85299.995 446100.005, "
+            "85299.995 446299.995, 85100.005 446299.995, "
+            "85100.005 446100.005)), ((85600.005 446900.005, "
+            "85799.995 446900.005, 85799.995 447099.995, "
+            "85600.005 447099.995, 85600.005 446900.005)))"),
     ]
     got = {r.zone_id: r for r in q.zonal(zones).collect()}
-    assert set(got) == {1, 2}
-    for zid, wkt in zones[:2]:
+    assert set(got) == {1, 2, 4}
+    for zid, wkt in (zones[0], zones[1], zones[3]):
         ref = q.polygon(wkt)
         assert got[zid].n_points == ref.count()
         zmin, zmax = ref.agg(F.min("z"), F.max("z")).first()
@@ -266,3 +273,47 @@ def test_zonal_stats_match_per_polygon_queries(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "PushedFilters" in plan
+
+
+@pytest.mark.spark
+def test_polygon_past_native_edges_matches_numpy(spark, sf_dir, stored):
+    """A polygon with more than MAX_NATIVE_EDGES edges is tested in the
+    Arrow-batched pandas UDF. On both layouts it must return exactly
+    the stored points that the NumPy even-odd test keeps, so neither
+    the prune nor the bbox refine loses a point."""
+    import math
+
+    from lasdb_spark.functions.geometry import (
+        MAX_NATIVE_EDGES,
+        _contains_numpy,
+        wkt_rings,
+    )
+    from lasdb_spark.operators.ingest import (
+        ingest_points,
+        load_dataset,
+        stored_points,
+    )
+    from lasdb_spark.operators.window_query import WindowQuerier
+    from lasdb_spark.sources.points import points_df
+
+    n = 200  # a 100-spike star
+    ring = [
+        (
+            85500.0 + (350.0 if i % 2 else 200.0) * math.cos(2 * math.pi * i / n),
+            446750.0 + (350.0 if i % 2 else 200.0) * math.sin(2 * math.pi * i / n),
+        )
+        for i in range(n)
+    ]
+    wkt = "POLYGON ((" + ", ".join(f"{x!r} {y!r}" for x, y in ring + ring[:1]) + "))"
+    rings = wkt_rings(wkt)
+    assert sum(len(r) for r in rings) > MAX_NATIVE_EDGES
+
+    base = tempfile.mkdtemp(prefix="lasdb_bigpoly_")
+    ingest_points(points_df(spark, sf_dir), "bp", base, layout="block")
+    for df, meta, layout in (stored, load_dataset(spark, base, "bp")):
+        got = WindowQuerier(df, meta, layout).polygon(wkt)
+        assert "ArrowEvalPython" in got._jdf.queryExecution().executedPlan().toString()
+        pts = stored_points(df, meta, layout).select("x", "y", "z").toPandas()
+        keep = _contains_numpy(rings, pts["x"].to_numpy(), pts["y"].to_numpy())
+        want = sorted(pts[keep].itertuples(index=False, name=None))
+        assert want and sorted(tuple(r) for r in got.collect()) == want, layout
