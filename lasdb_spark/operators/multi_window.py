@@ -18,14 +18,22 @@ points side derives its cell with ONE shift of the stored key
 join is then CELL EQUALITY: a broadcast hash join, never a nested
 loop, followed by the exact bbox refine and one map-side-partial
 aggregation on win_id. A coarse global key BETWEEN still reaches the
-Parquet scan for row-group pruning. Work scales with
+Parquet scan for row-group and page pruning. Work scales with
 |points in covered cells| + |windows|, not |points| × |windows|.
+
+The cell table is built on the driver and shipped as one Arrow table
+(:func:`local_frame`), so it plans as a ``LocalRelation``: a list of
+tuples would be parallelized as an RDD, and every job over it would
+start a Python worker.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..functions.geometry import (
     MAX_NATIVE_EDGES,
@@ -42,6 +50,20 @@ from .ingest import DatasetMeta, stored_points
 CELL_BUDGET = 4096
 
 _STATS_SCHEMA = "win_id long, n_points long, z_min double, z_max double"
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """``rows`` (tuples in the order of the DDL ``schema``) as a
+    DataFrame over a ``LocalRelation``. It ships as one Arrow table
+    whatever the session's Arrow setting; a list of tuples, or a pandas
+    frame with Arrow off, is parallelized as an RDD instead."""
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def plan_window_cells(windows, meta: DatasetMeta) -> tuple[int, list[tuple]]:
@@ -99,12 +121,12 @@ def _cell_join(
     ``table`` maps one planned row (win_id, cell, x0, x1, y0, y1) to a
     row of the broadcast cell table, whose ``schema`` names the
     ``cell`` column. The coarse global key range is pushed to the
-    Parquet scan, so row groups wholly outside the union of windows
-    are never read; the cell is one shift of the stored key."""
+    Parquet scan, so pages wholly outside the union of windows are
+    never read; the cell is one shift of the stored key."""
     shift, rows = plan_window_cells(windows, meta)
     if not rows:
         return None
-    cdf = df.sparkSession.createDataFrame([table(r) for r in rows], schema)
+    cdf = local_frame(df.sparkSession, [table(r) for r in rows], schema)
     lo = min(r[1] for r in rows) << (2 * shift)
     hi = ((max(r[1] for r in rows) + 1) << (2 * shift)) - 1
     return (
@@ -131,7 +153,7 @@ def multi_bbox_stats(
         "wy0 double, wy1 double",
     )
     if joined is None:
-        return df.sparkSession.createDataFrame([], _STATS_SCHEMA)
+        return local_frame(df.sparkSession, [], _STATS_SCHEMA)
     return (
         joined.filter(
             F.col("x").between(F.col("wx0"), F.col("wx1"))
@@ -184,8 +206,8 @@ def point_knn_join(
         "q_id long, cell long, qx double, qy double",
     )
     if cand is None:
-        return df.sparkSession.createDataFrame(
-            [], "q_id long, x double, y double, z double, d2 double"
+        return local_frame(
+            df.sparkSession, [], "q_id long, x double, y double, z double, d2 double"
         )
     d2 = (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx")) + (
         F.col("y") - F.col("qy")
@@ -287,9 +309,9 @@ def zonal_stats(
         df, meta, layout, windows, lambda r: r[:2], "zone_id long, cell long"
     )
     if cand is None:
-        return df.sparkSession.createDataFrame(
-            [], "zone_id long, n_points long, z_min double, z_max double, "
-            "z_avg double"
+        return local_frame(
+            df.sparkSession, [], "zone_id long, n_points long, z_min double, "
+            "z_max double, z_avg double"
         )
     inside = F.expr(
         "CASE "

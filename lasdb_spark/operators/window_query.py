@@ -4,7 +4,7 @@ The reference's filter-refine loop (pipeline/retrieve_data.py:33-153)
 re-expressed as ONE lazy DataFrame pipeline per query:
 
     driver: SFC decomposition of the window     (pure function, Q1)
-    scan:   key-range predicates → Parquet row-group pruning (Q2/Q3)
+    scan:   key-range predicates → Parquet row-group and page pruning (Q2/Q3)
     refine: exact geometry filter on original coords (Q5-Q9)
     write/return: a DataFrame — no intermediate materialization,
     no client round-trips, no DELETE-based refinement (SURVEY §2.6).
@@ -14,7 +14,7 @@ one loop (``WindowQuerier._window``); a shape supplies only its prune
 window and its exact predicate.
 
 At 100 TB the pruning predicate is what matters: the sorted-by-key
-layout means a small window touches a handful of row groups; the exact
+layout means a small window reads a handful of Parquet pages; the exact
 refine runs only on the surviving rows, JVM-side (whole-stage codegen)
 for every shape. The one exception is a polygon with more than
 ``MAX_NATIVE_EDGES`` edges, whose containment runs in an Arrow-batched
@@ -26,7 +26,6 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -42,22 +41,24 @@ from ..functions.geometry import (
     wkt_rings,
 )
 from ..pcsfc.range_search import (
+    MAX_OR_TERMS,
     apply_key_ranges,
     decompose_bbox,
     key_ranges_to_head_ranges,
     planning_grid_bounds,
 )
 from .ingest import DatasetMeta, unpack_blocks
-from .multi_window import multi_bbox_stats, point_knn_join, zonal_stats
+from .multi_window import local_frame, multi_bbox_stats, point_knn_join, zonal_stats
 
 RESULT_COLS = ("x", "y", "z")
 KNN_SCHEMA = "x double, y double, z double, d2 double"
-# ≤64 ranges keeps every query on the OR-of-BETWEENs path: the whole
-# predicate pushes into the Parquet scan (row-group pruning) and per-row
-# evaluation stays in codegen. More ranges only sharpen pruning
-# marginally while forcing the range-join fallback, whose broadcast
-# nested-loop comparison costs O(rows × ranges).
-MAX_RANGES = 64
+#: key ranges a window plans on the flat store. Its small pages make a
+#: coarse range cheap to read, while every OR term adds to the parse,
+#: optimisation and codegen each query pays afresh (its literals are
+#: new); planning 32 ranges measured ~14 % slower on ``window_mix``. A
+#: block store plans up to ``MAX_OR_TERMS`` head ranges instead, since
+#: every block it keeps is unpacked whole.
+FLAT_RANGES = 16
 
 
 def head_lookup(df: DataFrame, heads, meta: DatasetMeta, layout: str = "flat") -> DataFrame:
@@ -68,7 +69,7 @@ def head_lookup(df: DataFrame, heads, meta: DatasetMeta, layout: str = "flat") -
     ``heads`` is a list of sfc_head ints. The heads become merged head
     ranges, applied like a window's key ranges: to the sfc_head column
     on the block layout, and as key ranges [lo << t, (hi+1) << t) on
-    the flat layout's SORTED key column, so row-group stats skip cold
+    the flat layout's SORTED key column, so page stats skip cold
     blocks (an isin() on the derived head, key >> t, would not push)."""
     t = meta.tail_length
     # each head as a one-head range, sorted and merged with its neighbours
@@ -95,13 +96,23 @@ class WindowQuerier:
     layout: str = "flat"
 
     # -- planning ---------------------------------------------------------
-    def _key_ranges(self, x0: float, x1: float, y0: float, y1: float):
+    def _key_ranges(
+        self, x0: float, x1: float, y0: float, y1: float, shift: int, budget: int
+    ):
+        """At most ``budget`` ranges covering the window, planned on
+        cells ``2**shift`` grid units a side: ranges of the key shifted
+        right by ``2 * shift`` bits (the Morton prefix)."""
         sx, sy, _ = self.meta.scales
         ox, oy, _ = self.meta.offsets
         qx0, qx1 = planning_grid_bounds(x0, x1, sx, ox)
         qy0, qy1 = planning_grid_bounds(y0, y1, sy, oy)
         return decompose_bbox(
-            qx0, qx1, qy0, qy1, bits=self.meta.grid_bits, max_ranges=MAX_RANGES
+            qx0 >> shift,
+            qx1 >> shift,
+            qy0 >> shift,
+            qy1 >> shift,
+            bits=self.meta.grid_bits - shift,
+            max_ranges=budget,
         )
 
     def _pruned(
@@ -120,9 +131,16 @@ class WindowQuerier:
         block-level analog of the row-group stats the flat layout's z
         column gets from Parquet for free. (The exact per-point z
         filter still runs afterwards; this only skips work.)"""
-        ranges = self._key_ranges(x0, x1, y0, y1)
         if self.layout == "block":
-            head_ranges = key_ranges_to_head_ranges(ranges, self.meta.tail_length)
+            # a block is the finest grain the block layout can skip, so
+            # the range budget is spent on head cells: plan on cells of
+            # half the tail's bits (the grid keeps at least one bit),
+            # then drop the key bits left below the head
+            t = self.meta.tail_length
+            shift = min(t // 2, self.meta.grid_bits - 1)
+            head_ranges = key_ranges_to_head_ranges(
+                self._key_ranges(x0, x1, y0, y1, shift, MAX_OR_TERMS), t - 2 * shift
+            )
             blocks = apply_key_ranges(self.df, "sfc_head", head_ranges)
             if maxz is not None and "z_min" in self.df.columns:
                 blocks = blocks.filter(F.col("z_min") <= float(maxz))
@@ -130,7 +148,9 @@ class WindowQuerier:
                 blocks = blocks.filter(F.col("z_max") >= float(minz))
             return unpack_blocks(blocks, self.meta)
         if "sfc_key" in self.df.columns:
-            return apply_key_ranges(self.df, "sfc_key", ranges)
+            return apply_key_ranges(
+                self.df, "sfc_key", self._key_ranges(x0, x1, y0, y1, 0, FLAT_RANGES)
+            )
         return self.df  # raw points: no index available, full scan + refine
 
     @staticmethod
@@ -227,11 +247,7 @@ class WindowQuerier:
             if px - r <= x0 and px + r >= x1 and py - r <= y0 and py + r >= y1:
                 break
             r *= 2.0
-        # through pandas so Arrow ships the rows as one LocalRelation; a
-        # list of Rows is parallelized as an RDD, which costs more than
-        # running the search again
-        answer = pd.DataFrame(rows, columns=[*RESULT_COLS, "d2"], dtype="float64")
-        return self.df.sparkSession.createDataFrame(answer, KNN_SCHEMA)
+        return local_frame(self.df.sparkSession, rows, KNN_SCHEMA)
 
     def multi_bbox(self, windows) -> DataFrame:
         """Per-window stats for a TABLE of bbox windows in one scan —

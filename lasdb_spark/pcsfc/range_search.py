@@ -19,8 +19,6 @@ from __future__ import annotations
 import math
 from typing import Sequence
 
-from .morton import encode_morton_2d
-
 DEFAULT_MAX_RANGES = 256
 
 
@@ -51,8 +49,9 @@ def decompose_bbox(
     Level-by-level (BFS) quadtree refinement over the 2^bits × 2^bits
     grid. A cell fully inside the window emits its whole contiguous key
     range; a disjoint cell is pruned; an overlapping cell is split —
-    until splitting would exceed the budget, at which point remaining
-    overlap cells are emitted conservatively.
+    while the merged ranges of the next level still fit the budget.
+    The first level that does not fit is not taken: the overlap cells
+    of the last level are emitted whole, conservatively.
     """
     if bits < 1 or bits > 31:
         raise ValueError(f"bits must be in [1, 31], got {bits}")
@@ -62,39 +61,35 @@ def decompose_bbox(
     if qxmin > qxmax or qymin > qymax:
         return []
 
-    ranges: list[tuple[int, int]] = []
-    # overlap cells as (x0, y0) of a size×size Morton-aligned square
-    cells: list[tuple[int, int]] = [(0, 0)]
+    ranges: list[tuple[int, int]] = []  # merged ranges of inside cells
+    # overlap cells as (x0, y0, first key) of size×size Morton-aligned
+    # squares, in key order; x is the low bit of each interleaved pair,
+    # so quadrant q (x, then y) of a cell starts q quarters into it
+    cells: list[tuple[int, int, int]] = [(0, 0, 0)]
     size = 1 << bits
     while cells and size > 1:
         half = size >> 1
-        nxt: list[tuple[int, int]] = []
-        for x0, y0 in cells:
-            for dx, dy in ((0, 0), (half, 0), (0, half), (half, half)):
-                cx, cy = x0 + dx, y0 + dy
+        span = half * half
+        inside: list[tuple[int, int]] = []
+        nxt: list[tuple[int, int, int]] = []
+        for x0, y0, base in cells:
+            for q, (cx, cy) in enumerate(
+                ((x0, y0), (x0 + half, y0), (x0, y0 + half), (x0 + half, y0 + half))
+            ):
                 if cx > qxmax or cy > qymax or cx + half - 1 < qxmin or cy + half - 1 < qymin:
                     continue  # disjoint
+                lo = base + q * span
                 if cx >= qxmin and cy >= qymin and cx + half - 1 <= qxmax and cy + half - 1 <= qymax:
-                    base = encode_morton_2d(cx, cy)
-                    ranges.append((base, base + half * half - 1))
+                    inside.append((lo, lo + span - 1))
                 else:
-                    nxt.append((cx, cy))
-        size = half
-        # Budget check: stop refining if one more level could blow the cap
-        # (each overlap cell may yield ≤3 new ranges/cells per level).
-        if len(ranges) + 3 * len(nxt) > max_ranges:
-            for cx, cy in nxt:
-                base = encode_morton_2d(cx, cy)
-                ranges.append((base, base + size * size - 1))
-            cells = []
-        else:
-            cells = nxt
-    # size == 1 leftovers are single cells intersecting the window
-    for cx, cy in cells:
-        k = encode_morton_2d(cx, cy)
-        ranges.append((k, k))
-    ranges.sort()
-    return _merge_ranges(ranges)
+                    nxt.append((cx, cy, lo))
+        refined = _merge_ranges(sorted(ranges + inside))
+        partial = [(lo, lo + span - 1) for _, _, lo in nxt]
+        if len(_merge_ranges(sorted(refined + partial))) > max_ranges:
+            break  # over budget: keep this level's overlap cells whole
+        ranges, cells, size = refined, nxt, half
+    whole = [(lo, lo + size * size - 1) for _, _, lo in cells]
+    return _merge_ranges(sorted(ranges + whole))
 
 
 def key_ranges_to_head_ranges(
@@ -123,12 +118,13 @@ def _ranges_sql(colname: str, ranges: Sequence[tuple[int, int]]) -> str:
 
 
 # Above this many ranges, OR-of-BETWEENs stops paying for itself
-# (codegen size) and a broadcast range semi-join wins. The coarse
-# [min, max] BETWEEN is still pushed to the Parquet scan either way.
-# 64 comparisons on one long column stay comfortably inside codegen
-# limits (blowups observed near ~256) while keeping full row-group
-# skipping for typical window decompositions.
-MAX_OR_TERMS = 64
+# and a broadcast range semi-join wins; no window plans more ranges
+# than this. The cap is set by HotSpot, not Janino: each OR term
+# adds ~150 bytes of bytecode to the scan stage's method, and a method
+# past HotSpot's 8,000-byte huge-method limit is never JIT-compiled,
+# so the filter runs in the bytecode interpreter. With a bbox refine,
+# 32 terms compile to a ~5.3 KB method and 64 terms to ~10.1 KB.
+MAX_OR_TERMS = 32
 
 
 def apply_key_ranges(df, colname: str, ranges: Sequence[tuple[int, int]]):
@@ -138,7 +134,7 @@ def apply_key_ranges(df, colname: str, ranges: Sequence[tuple[int, int]]):
     pipeline/retrieve_data.py:110-125, Spark-first):
 
     - few ranges → balanced OR-of-BETWEENs, fully pushed down to the
-      Parquet scan (row-group skipping) — the Spark analog of the
+      Parquet scan (row-group and page skipping) — the Spark analog of the
       reference's B-tree range scan (db/__init__.py:118-126);
     - many ranges → one coarse ``BETWEEN(min, max)`` that IS pushed
       down, then a broadcast LEFT SEMI range join against the tiny

@@ -105,6 +105,20 @@ def test_decomposition_respects_cap():
         assert any(lo <= k <= hi for lo, hi in ranges)
 
 
+def test_decomposition_spends_its_budget():
+    """A budget the exact decomposition fits in gets the exact ranges:
+    the planner refines while the merged ranges fit, not while a
+    worst-case growth estimate does (which stopped this 1-wide column
+    at 32 coarse ranges of a 64-range budget)."""
+    from lasdb_spark.pcsfc import decompose_bbox
+
+    exact = decompose_bbox(5, 5, 0, 63, bits=6, max_ranges=10_000)
+    assert len(exact) == 64
+    assert decompose_bbox(5, 5, 0, 63, bits=6, max_ranges=64) == exact
+    coarse = decompose_bbox(5, 5, 0, 63, bits=6, max_ranges=63)
+    assert len(coarse) <= 63 and coarse != exact
+
+
 def test_decomposition_empty_and_clamped():
     from lasdb_spark.pcsfc import decompose_bbox
 
