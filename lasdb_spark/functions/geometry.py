@@ -9,7 +9,7 @@ pipeline/retrieve_data.py:58-83) with:
   ``MAX_NATIVE_EDGES`` edges the same test runs vectorized with NumPy
   in an Arrow-batched pandas UDF (:func:`point_in_polygon_udf`) — the
   only Python a window query can put on the executor hot path;
-- the polyline-buffer and circle predicates, native likewise.
+- the polyline-buffer and circle predicates, as SQL likewise.
 
 Even-odd rule: including hole rings in the edge set automatically
 excludes hole interiors, so polygons with 1..n holes (reference
@@ -136,22 +136,9 @@ def point_in_polygon_udf(wkt: str):
     return _contains
 
 
-def point_in_polygon_col(
-    rings: list[list[tuple[float, float]]], x: str = "x", y: str = "y"
-) -> Column:
-    """Even-odd containment of columns ``x``, ``y`` as a NATIVE Column
-    expression — one XOR term per polygon edge, identical arithmetic to
-    ``_contains_numpy``: :func:`point_in_polygon_sql` parsed in one
-    call, so engine and oracle share one renderer.
-
-    For the window-query workload polygons are small (tens of edges),
-    so the whole test stays inside whole-stage codegen: no Python, no
-    Arrow transfer, vectorized over the scan. Callers should fall back
-    to :func:`point_in_polygon_udf` past ~``MAX_NATIVE_EDGES`` edges to
-    keep the generated code within JIT limits."""
-    return F.expr(point_in_polygon_sql(rings, x, y))
-
-
+#: edges up to which a window's containment test is the SQL of
+#: :func:`point_in_polygon_sql`, inside whole-stage codegen and within
+#: the JIT's limits; a bigger polygon runs :func:`point_in_polygon_udf`
 MAX_NATIVE_EDGES = 128
 
 
@@ -241,12 +228,13 @@ def polyline_bbox(pts: list[tuple[float, float]], dist: float) -> tuple[float, f
     return min(xs) - dist, max(xs) + dist, min(ys) - dist, max(ys) + dist
 
 
-def circle_predicate(x: Column, y: Column, cx: float, cy: float, r: float) -> Column:
-    """(x-cx)² + (y-cy)² ≤ r² as a native Column (reference Q7 used
-    PostGIS ST_DWithin + DELETE; we filter, retrieve_data.py:46-63)."""
-    dx = x - F.lit(float(cx))
-    dy = y - F.lit(float(cy))
-    return (dx * dx + dy * dy) <= F.lit(float(r) * float(r))
+def circle_sql(cx: float, cy: float, r: float) -> str:
+    """(x-cx)² + (y-cy)² ≤ r² over columns ``x``, ``y`` as SQL with
+    DOUBLE literals (reference Q7 used PostGIS ST_DWithin + DELETE; we
+    filter, retrieve_data.py:46-63). r² is computed in Python, so every
+    engine compares against the same value."""
+    dx, dy = f"(x - {_d(cx)})", f"(y - {_d(cy)})"
+    return f"(({dx} * {dx} + {dy} * {dy}) <= {_d(float(r) * float(r))})"
 
 
 def _segment_stations(pts: list[tuple[float, float]]):

@@ -175,7 +175,7 @@ def pack_blocks(df_sfc: DataFrame) -> DataFrame:
 def unpack_blocks(blocks: DataFrame, meta: DatasetMeta) -> DataFrame:
     """Inverse of pack_blocks: one row per point with its rebuilt key
     and decoded coordinates (Q4, F4, F7) — columns
-    ``sfc_head, sfc_tail, z, sfc_key, x, y``.
+    ``sfc_head, [z_min, z_max,] sfc_tail, z, sfc_key, x, y``.
 
     Every point is decoded INSIDE its block's arrays, before the
     explode, so ``x``/``y`` are generator outputs: a later filter on
@@ -183,7 +183,12 @@ def unpack_blocks(blocks: DataFrame, meta: DatasetMeta) -> DataFrame:
     lookup chain once per reference (which blew block polygon plans
     past Janino's 64 KB method limit). The decode is one SQL string,
     parsed by the JVM in one call; the lookup table it indexes 16
-    times is a column, so its 256 literals are parsed once."""
+    times is a column, so its 256 literals are parsed once.
+
+    The block columns ``sfc_head`` and, when stored, ``z_min``/``z_max``
+    pass through the explode, so a later filter on them is pushed below
+    it into the Parquet scan: a window filters this view, built once,
+    and still skips whole blocks before any is unpacked."""
     t = meta.tail_length
     sx, sy, _ = meta.scales
     ox, oy, _ = meta.offsets
@@ -196,10 +201,11 @@ def unpack_blocks(blocks: DataFrame, meta: DatasetMeta) -> DataFrame:
         f"'x', CAST({gx} AS DOUBLE) * {double_sql(sx)} + {double_sql(ox)}, "
         f"'y', CAST({gy} AS DOUBLE) * {double_sql(sy)} + {double_sql(oy)})"
     )
+    block = ["sfc_head", *(c for c in ("z_min", "z_max") if c in blocks.columns)]
     return blocks.selectExpr(
-        "sfc_head", "sfc_tail", "z", f"{COMPACT_LUT} AS compact_lut"
+        *block, "sfc_tail", "z", f"{COMPACT_LUT} AS compact_lut"
     ).selectExpr(
-        "sfc_head", f"inline(transform(arrays_zip(sfc_tail, z), p -> {point}))"
+        *block, f"inline(transform(arrays_zip(sfc_tail, z), p -> {point}))"
     )
 
 

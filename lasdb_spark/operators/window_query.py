@@ -1,17 +1,25 @@
 """Spatial window queries: bbox / circle / polygon / z-slab / kNN.
 
 The reference's filter-refine loop (pipeline/retrieve_data.py:33-153)
-re-expressed as ONE lazy DataFrame pipeline per query:
+re-expressed as ONE lazy DataFrame pipeline per query. Its fixed part
+is the querier's point view, built (parsed and analysed) once: the
+stored table on the flat layout, the decoded blocks
+(``unpack_blocks``) on the block layout. A window request adds three
+steps to that view:
 
     driver: SFC decomposition of the window     (pure function, Q1)
-    scan:   key-range predicates → Parquet row-group and page pruning (Q2/Q3)
-    refine: exact geometry filter on original coords (Q5-Q9)
-    write/return: a DataFrame — no intermediate materialization,
-    no client round-trips, no DELETE-based refinement (SURVEY §2.6).
+    scan:   key-range predicates → Parquet row-group and page pruning
+            (Q2/Q3); on the block layout Catalyst pushes them, and the
+            z-slab's block prune, below the unpack into the scan
+    refine: ONE predicate — the exact geometry test on original coords
+            (Q5-Q9) AND the z-slab, rendered as SQL text
+    return: the x/y/z select — a DataFrame, no intermediate
+            materialization, no client round-trips, no DELETE-based
+            refinement (SURVEY §2.6).
 
-Every window shape (bbox, circle, polygon, polyline buffer) runs this
-one loop (``WindowQuerier._window``); a shape supplies only its prune
-window and its exact predicate.
+Every window shape (bbox, circle, polygon, polyline buffer) and every
+kNN round runs this one loop (``WindowQuerier._pruned``); a shape
+supplies only its prune window and its exact predicate's SQL.
 
 At 100 TB the pruning predicate is what matters: the sorted-by-key
 layout means a small window reads a handful of Parquet pages; the exact
@@ -24,19 +32,19 @@ pandas UDF.
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.geometry import (
     MAX_NATIVE_EDGES,
-    circle_predicate,
+    circle_sql,
     parse_wkt_linestring,
-    point_in_polygon_col,
+    point_in_polygon_sql,
     point_in_polygon_udf,
     polyline_bbox,
-    polyline_buffer_col,
+    polyline_buffer_sql,
     rings_bbox,
     wkt_rings,
 )
@@ -47,6 +55,7 @@ from ..pcsfc.range_search import (
     key_ranges_to_head_ranges,
     planning_grid_bounds,
 )
+from ..pcsfc.sqlgen import double_sql as _d
 from .ingest import DatasetMeta, unpack_blocks
 from .multi_window import local_frame, multi_bbox_stats, point_knn_join, zonal_stats
 
@@ -80,8 +89,8 @@ def head_lookup(df: DataFrame, heads, meta: DatasetMeta, layout: str = "flat") -
     return apply_key_ranges(df, "sfc_key", key_ranges)
 
 
-def _in_box(x0: float, x1: float, y0: float, y1: float):
-    return F.col("x").between(x0, x1) & F.col("y").between(y0, y1)
+def _box_sql(x0: float, x1: float, y0: float, y1: float) -> str:
+    return f"x BETWEEN {_d(x0)} AND {_d(x1)} AND y BETWEEN {_d(y0)} AND {_d(y1)}"
 
 
 @dataclass
@@ -89,11 +98,18 @@ class WindowQuerier:
     """Query executor over an ingested dataset (flat or block layout).
 
     ``df`` is the stored table; ``meta`` its DatasetMeta (always read
-    from storage — reference hard-codes split params, query.py:27)."""
+    from storage — reference hard-codes split params, query.py:27).
+    ``view`` is the table as one row per point, which every window
+    request filters; on the block layout it is the unpack of ``df``,
+    built here once instead of once per request."""
 
     df: DataFrame
     meta: DatasetMeta
     layout: str = "flat"
+    view: DataFrame = field(init=False, repr=False)
+
+    def __post_init__(self):
+        self.view = unpack_blocks(self.df, self.meta) if self.layout == "block" else self.df
 
     # -- planning ---------------------------------------------------------
     def _key_ranges(
@@ -123,14 +139,20 @@ class WindowQuerier:
         y1: float,
         minz: float | None = None,
         maxz: float | None = None,
+        refine: str | None = None,
+        udf: Column | None = None,
     ) -> DataFrame:
-        """Candidate rows via SFC range pushdown, decoded to x/y/z.
+        """The view's points in the window (x0, x1, y0, y1): the SFC
+        key ranges, then ONE filter — the ``refine`` SQL AND the z-slab
+        (reference Q9 ran post-hoc DELETEs), with a ``udf`` Column
+        ANDed in when the refine cannot be SQL.
 
-        On the block layout a z-slab additionally prunes whole blocks
-        by their stored z_min/z_max BEFORE the unpack explode — the
+        On the block layout the ranges are on ``sfc_head``, and a z-slab
+        also tests each block's stored z_min/z_max. Both reference only
+        block columns, so Catalyst pushes them below the unpack into
+        the scan: whole blocks are skipped before the explode — the
         block-level analog of the row-group stats the flat layout's z
-        column gets from Parquet for free. (The exact per-point z
-        filter still runs afterwards; this only skips work.)"""
+        column gets from Parquet for free."""
         if self.layout == "block":
             # a block is the finest grain the block layout can skip, so
             # the range budget is spent on head cells: plan on cells of
@@ -141,47 +163,43 @@ class WindowQuerier:
             head_ranges = key_ranges_to_head_ranges(
                 self._key_ranges(x0, x1, y0, y1, shift, MAX_OR_TERMS), t - 2 * shift
             )
-            blocks = apply_key_ranges(self.df, "sfc_head", head_ranges)
-            if maxz is not None and "z_min" in self.df.columns:
-                blocks = blocks.filter(F.col("z_min") <= float(maxz))
-            if minz is not None and "z_max" in self.df.columns:
-                blocks = blocks.filter(F.col("z_max") >= float(minz))
-            return unpack_blocks(blocks, self.meta)
-        if "sfc_key" in self.df.columns:
-            return apply_key_ranges(
-                self.df, "sfc_key", self._key_ranges(x0, x1, y0, y1, 0, FLAT_RANGES)
+            out = apply_key_ranges(self.view, "sfc_head", head_ranges)
+        elif "sfc_key" in self.view.columns:
+            out = apply_key_ranges(
+                self.view, "sfc_key", self._key_ranges(x0, x1, y0, y1, 0, FLAT_RANGES)
             )
-        return self.df  # raw points: no index available, full scan + refine
-
-    @staticmethod
-    def _zslab(df: DataFrame, minz: float | None, maxz: float | None) -> DataFrame:
-        """Composable z filters (reference Q9 ran post-hoc DELETEs)."""
+        else:
+            out = self.view  # raw points: no index available, full scan + refine
+        terms = [refine] if refine else []
         if minz is not None:
-            df = df.filter(F.col("z") >= float(minz))
+            terms.append(f"z >= {_d(minz)}")
+            if "z_max" in self.view.columns:
+                terms.append(f"z_max >= {_d(minz)}")
         if maxz is not None:
-            df = df.filter(F.col("z") <= float(maxz))
-        return df
+            terms.append(f"z <= {_d(maxz)}")
+            if "z_min" in self.view.columns:
+                terms.append(f"z_min <= {_d(maxz)}")
+        if not terms:
+            return out
+        cond = F.expr(" AND ".join(terms))
+        return out.filter(cond if udf is None else cond & udf)
 
-    def _window(self, window, refine, minz, maxz) -> DataFrame:
-        """The filter–refine loop every window shape shares: candidates
-        pruned by the ``window`` (x0, x1, y0, y1), each ``refine``
-        predicate applied in order, then the z-slab."""
-        out = self._pruned(*window, minz, maxz)
-        for pred in refine:
-            out = out.filter(pred)
-        return self._zslab(out, minz, maxz).select(*RESULT_COLS)
+    def _window(self, window, refine: str, minz, maxz, udf=None) -> DataFrame:
+        """The filter–refine loop every window shape shares."""
+        return self._pruned(*window, minz, maxz, refine, udf).select(*RESULT_COLS)
 
     # -- query surface (Q6-Q11) -------------------------------------------
     def bbox(self, bbox, minz=None, maxz=None) -> DataFrame:
         """bbox = [x_min, x_max, y_min, y_max] (Q6)."""
         window = tuple(float(v) for v in bbox)
-        return self._window(window, [_in_box(*window)], minz, maxz)
+        return self._window(window, _box_sql(*window), minz, maxz)
 
     def circle(self, center, radius, minz=None, maxz=None) -> DataFrame:
         """center = [cx, cy] (Q7): circumscribing-bbox prune + exact."""
         cx, cy, r = float(center[0]), float(center[1]), float(radius)
-        exact = circle_predicate(F.col("x"), F.col("y"), cx, cy, r)
-        return self._window((cx - r, cx + r, cy - r, cy + r), [exact], minz, maxz)
+        if not r >= 0.0:
+            raise ValueError(f"circle radius must be >= 0, got {radius!r}")
+        return self._window((cx - r, cx + r, cy - r, cy + r), circle_sql(cx, cy, r), minz, maxz)
 
     def polygon(self, wkt: str, minz=None, maxz=None) -> DataFrame:
         """WKT POLYGON with holes, or MULTIPOLYGON (Q8): bbox prune +
@@ -189,16 +207,16 @@ class WindowQuerier:
         combined ring set (disjoint members make the shared even-odd
         test exact — no per-polygon dispatch).
 
-        Containment is a native Column expression (codegen, no Python)
-        for geometries up to MAX_NATIVE_EDGES edges; bigger ones fall
-        back to the Arrow-batched pandas UDF."""
+        Containment is native SQL (codegen, no Python) for geometries
+        up to MAX_NATIVE_EDGES edges; bigger ones fall back to the
+        Arrow-batched pandas UDF."""
         rings = wkt_rings(wkt)
         window = rings_bbox(rings)
+        box = _box_sql(*window)
         if sum(len(r) for r in rings) <= MAX_NATIVE_EDGES:
-            exact = point_in_polygon_col(rings)
-        else:
-            exact = point_in_polygon_udf(wkt)(F.col("x"), F.col("y"))
-        return self._window(window, [_in_box(*window), exact], minz, maxz)
+            return self._window(window, f"{box} AND {point_in_polygon_sql(rings)}", minz, maxz)
+        udf = point_in_polygon_udf(wkt)(F.col("x"), F.col("y"))
+        return self._window(window, box, minz, maxz, udf)
 
     def polyline_buffer(self, wkt: str, dist: float, minz=None, maxz=None) -> DataFrame:
         """All points within ``dist`` of a WKT LINESTRING (the reference
@@ -207,9 +225,11 @@ class WindowQuerier:
         fully native: OR over per-segment clamped distance² terms)."""
         pts = parse_wkt_linestring(wkt)
         dist = float(dist)
+        if not dist >= 0.0:
+            raise ValueError(f"polyline buffer distance must be >= 0, got {dist!r}")
         window = polyline_bbox(pts, dist)
-        exact = polyline_buffer_col(pts, dist)
-        return self._window(window, [_in_box(*window), exact], minz, maxz)
+        refine = f"{_box_sql(*window)} AND {polyline_buffer_sql(pts, dist)}"
+        return self._window(window, refine, minz, maxz)
 
     def knn(self, point, k: int, minz=None, maxz=None) -> DataFrame:
         """k nearest neighbours of [px, py] (Q11 — declared but NOT
@@ -222,10 +242,10 @@ class WindowQuerier:
         (d2, x, y, z) for determinism. The last round's collected rows
         are the answer, returned as a local DataFrame so the caller's
         action does not run the search again."""
+        if k < 1:
+            raise ValueError(f"k must be >= 1, got {k!r}")
         px, py = float(point[0]), float(point[1])
-        d2 = (F.col("x") - px) * (F.col("x") - px) + (F.col("y") - py) * (
-            F.col("y") - py
-        )
+        d2 = F.expr(f"(x - {_d(px)}) * (x - {_d(px)}) + (y - {_d(py)}) * (y - {_d(py)}) AS d2")
 
         # initial half-width from global density (meta bbox is exact)
         x0, x1, y0, y1 = self.meta.bbox[:4]
@@ -235,8 +255,7 @@ class WindowQuerier:
 
         while True:
             cand = self._pruned(px - r, px + r, py - r, py + r, minz, maxz)
-            cand = self._zslab(cand, minz, maxz).select(*RESULT_COLS, d2.alias("d2"))
-            rows = cand.orderBy("d2", "x", "y", "z").limit(k).collect()
+            rows = cand.select(*RESULT_COLS, d2).orderBy("d2", "x", "y", "z").limit(k).collect()
             if len(rows) >= k and rows[-1].d2 <= r * r:
                 break
             # Exact-exit: once the window contains the entire data
@@ -303,7 +322,7 @@ class WindowQuerier:
         if mode == "polygon":
             return self.polygon(geometry, minz, maxz)
         if mode == "nn":
-            return self.knn(geometry, k or 1000, minz, maxz)
+            return self.knn(geometry, 1000 if k is None else k, minz, maxz)
         if mode == "polyline":
             wkt, dist = geometry
             return self.polyline_buffer(wkt, dist, minz, maxz)

@@ -5,12 +5,14 @@ import math
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from lasdb_spark.functions.geometry import (
     _contains_numpy,
+    circle_sql,
     parse_wkt_linestring,
     parse_wkt_polygon,
-    point_in_polygon_col,
+    point_in_polygon_sql,
     polyline_buffer_col,
 )
 
@@ -27,7 +29,7 @@ def _star_wkt(cx=50.0, cy=50.0, r1=40.0, r2=15.0, n=7) -> str:
 
 @pytest.mark.spark
 def test_native_polygon_matches_numpy(spark):
-    """Concave 14-edge star: Column expression == numpy ray cast on a
+    """Concave 14-edge star: the SQL expression == numpy ray cast on a
     deterministic point grid."""
     wkt = _star_wkt()
     rings = parse_wkt_polygon(wkt)
@@ -41,7 +43,7 @@ def test_native_polygon_matches_numpy(spark):
         [(float(a), float(b)) for a, b in zip(px, py)], "x double, y double"
     )
     got = (
-        df.withColumn("inside", point_in_polygon_col(rings))
+        df.withColumn("inside", F.expr(point_in_polygon_sql(rings)))
         .orderBy("x", "y")
         .collect()
     )
@@ -80,6 +82,31 @@ def test_polyline_buffer_matches_numpy(spark):
     want = {(float(a), float(b)): bool(v) for a, b, v in zip(px, py, expected)}
     for r in got:
         assert want[(r.x, r.y)] == r.inside
+
+
+@pytest.mark.spark
+def test_circle_sql_matches_numpy_on_the_radius(spark):
+    """Points on, and one ulp either side of, the circle: the SQL test
+    decides each exactly as the NumPy formula (x-cx)² + (y-cy)² ≤ r²
+    does, rounding included."""
+    cx, cy, r = 85500.25, -446700.75, 0.3
+    a = np.linspace(0.0, 2 * np.pi, 64, endpoint=False)
+    px = cx + r * np.cos(a)
+    py = cy + r * np.sin(a)
+    px = np.concatenate([px, np.nextafter(px, np.inf), np.nextafter(px, -np.inf),
+                         [cx + r, cx, cx + 0.18]])
+    py = np.concatenate([py, py, py, [cy, cy - r, cy + 0.24]])
+    expected = (px - cx) * (px - cx) + (py - cy) * (py - cy) <= r * r
+    assert 0 < expected.sum() < len(expected)
+
+    df = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(px, py))],
+        "i long, x double, y double",
+    )
+    got = df.selectExpr("i", f"{circle_sql(cx, cy, r)} AS inside").collect()
+    assert len(got) == len(expected)
+    for row in got:
+        assert row.inside == bool(expected[row.i]), row.i
 
 
 def test_wkt_parsers_reject_garbage():

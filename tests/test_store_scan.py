@@ -1,8 +1,11 @@
 """What the store's scan reads and compiles: page skipping on the
 flat store's sorted key, a scan stage small enough for the JIT, block
-windows planned on head cells, and driver-built tables that plan as
-local relations."""
+windows planned on head cells, driver-built tables that plan as
+local relations, and window requests built on a point view the
+querier builds once — with the block prunes still pushed to the scan
+and every shape's answer equal to brute force on both layouts."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -154,3 +157,153 @@ def test_driver_tables_are_local_relations(spark, flat_store):
             assert got.count() > 0, name
     finally:
         spark.conf.set(key, before)
+
+
+def _pushed_filters(df) -> str:
+    """The PushedFilters of the one Parquet scan of ``df``, untruncated."""
+    (scan,) = [
+        n for n in _nodes(_executed(df))
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+    return scan.metadata().apply("PushedFilters")
+
+
+@pytest.fixture(scope="module")
+def grid_stores(spark, tmp_path_factory):
+    """The same 20k integer-grid points stored in both layouts (scale 1,
+    offset 0, so the block layout's quantize round trip is exact), and
+    the points as NumPy columns for the brute-force answers."""
+    from lasdb_spark.operators.ingest import ingest_points
+
+    pts = spark.range(20_000).select(
+        F.floor(F.rand(7) * 1000).cast("double").alias("x"),
+        F.floor(F.rand(8) * 1000).cast("double").alias("y"),
+        F.floor(F.rand(9) * 50).cast("double").alias("z"),
+    )
+    base = str(tmp_path_factory.mktemp("grid_stores"))
+    for layout in ("flat", "block"):
+        ingest_points(pts, layout, base, layout=layout)
+    xyz = np.array(pts.collect(), dtype=np.float64)
+    return base, xyz
+
+
+def _querier(spark, grid_stores, layout):
+    from lasdb_spark.operators.ingest import load_dataset
+    from lasdb_spark.operators.window_query import WindowQuerier
+
+    return WindowQuerier(*load_dataset(spark, grid_stores[0], layout))
+
+
+POLYGON = (
+    "POLYGON ((100 100, 420 140, 380 460, 120 400, 100 100), "
+    "(200 200, 300 200, 300 300, 200 300, 200 200))"
+)
+LINE = "LINESTRING (520 80, 700 400, 900 120)"
+#: mode → geometry of every window shape a request can name
+SHAPES = {
+    "bbox": [100.0, 260.5, 200.0, 330.5],
+    "circle": ([600.5, 600.5], 90.0),
+    "polygon": POLYGON,
+    "polyline": (LINE, 25.5),
+    "nn": [500.5, 500.5],
+}
+
+
+def _brute_force(xyz, mode, geometry, minz, maxz):
+    """Sorted (x, y, z) rows answering one request, in NumPy."""
+    from lasdb_spark.functions.geometry import (
+        _contains_numpy,
+        _segments,
+        parse_wkt_linestring,
+        wkt_rings,
+    )
+
+    x, y, z = xyz[:, 0], xyz[:, 1], xyz[:, 2]
+    keep = np.ones(len(xyz), dtype=bool)
+    if minz is not None:
+        keep &= z >= minz
+    if maxz is not None:
+        keep &= z <= maxz
+    if mode == "bbox":
+        x0, x1, y0, y1 = geometry
+        keep &= (x >= x0) & (x <= x1) & (y >= y0) & (y <= y1)
+    elif mode == "circle":
+        (cx, cy), r = geometry
+        keep &= (x - cx) * (x - cx) + (y - cy) * (y - cy) <= r * r
+    elif mode == "polygon":
+        keep &= _contains_numpy(wkt_rings(geometry), x, y)
+    elif mode == "polyline":
+        near = np.zeros(len(xyz), dtype=bool)
+        for ax, ay, dx, dy, l2 in _segments(parse_wkt_linestring(geometry[0])):
+            t = np.clip(((x - ax) * dx + (y - ay) * dy) / l2, 0.0, 1.0)
+            cx, cy = ax + t * dx, ay + t * dy
+            near |= (x - cx) * (x - cx) + (y - cy) * (y - cy) <= geometry[1] ** 2
+        keep &= near
+    else:  # nn, k = 25
+        px, py = geometry
+        d2 = (x - px) * (x - px) + (y - py) * (y - py)
+        idx = np.flatnonzero(keep)
+        order = np.lexsort((z[idx], y[idx], x[idx], d2[idx]))[:25]
+        return sorted(map(tuple, xyz[idx[order]].tolist()))
+    return sorted(map(tuple, xyz[keep].tolist()))
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("layout", ["flat", "block"])
+def test_every_shape_matches_brute_force(spark, grid_stores, layout):
+    q = _querier(spark, grid_stores, layout)
+    for mode, geometry in SHAPES.items():
+        for minz, maxz in ((None, None), (5.0, 30.0)):
+            got = q.query(mode, geometry, minz, maxz, k=25)
+            rows = sorted(tuple(r)[:3] for r in got.collect())
+            want = _brute_force(grid_stores[1], mode, geometry, minz, maxz)
+            assert rows == want and want, (layout, mode, minz)
+
+
+@pytest.mark.spark
+def test_block_view_keeps_block_prunes_in_the_scan(spark, grid_stores):
+    """The window filters the unpacked view, yet Catalyst pushes its
+    head ranges, and a z-slab's block z_min/z_max tests, below the
+    explode into the Parquet scan."""
+    q = _querier(spark, grid_stores, "block")
+    pushed = _pushed_filters(q.bbox(SHAPES["bbox"]))
+    assert "sfc_head" in pushed and "z_min" not in pushed
+    pushed = _pushed_filters(q.bbox(SHAPES["bbox"], minz=5.0, maxz=30.0))
+    assert "sfc_head" in pushed
+    assert "LessThanOrEqual(z_min,30.0)" in pushed
+    assert "GreaterThanOrEqual(z_max,5.0)" in pushed
+
+
+@pytest.mark.spark
+def test_block_querier_unpacks_once(spark, grid_stores, monkeypatch):
+    """The block querier builds its unpacked view once; no window
+    request or kNN round builds another."""
+    import lasdb_spark.operators.window_query as wq
+
+    calls = []
+    unpack = wq.unpack_blocks
+    monkeypatch.setattr(wq, "unpack_blocks", lambda *a: calls.append(a) or unpack(*a))
+    q = _querier(spark, grid_stores, "block")
+    assert len(calls) == 1
+    for mode, geometry in SHAPES.items():
+        for minz in (None, 5.0):
+            q.query(mode, geometry, minz, None, k=25).collect()
+    assert len(calls) == 1
+
+
+@pytest.mark.spark
+def test_request_arguments_are_checked(spark, grid_stores):
+    """k < 1, a negative circle radius and a negative buffer distance
+    are errors, not empty or clipped answers; an unset k means 1000."""
+    q = _querier(spark, grid_stores, "flat")
+    for bad in (
+        lambda: q.knn([500.0, 500.0], 0),
+        lambda: q.query("nn", [500.0, 500.0], k=0),
+        lambda: q.circle([500.0, 500.0], -10.0),
+        lambda: q.query("circle", ([500.0, 500.0], -10.0)),
+        lambda: q.polyline_buffer(LINE, -1.0),
+    ):
+        with pytest.raises(ValueError):
+            bad()
+    assert len(q.query("nn", [500.0, 500.0]).collect()) == 1000
+    assert q.circle([500.5, 500.5], 0.0).count() == 0
